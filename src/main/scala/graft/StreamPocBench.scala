@@ -34,7 +34,7 @@ object StreamPocBench {
       val stable = Fixtures.stable
       val p = Fixtures.pipeline(JPaths.get(stable("barStock")).getParent, stable)
       val stockDf = p.barStock(spark)
-      val (salesDf, _) = p.sales(spark)
+      val salesDf = p.sales(spark)
       val ck = p.cocktails(spark, salesDf)
       val dir = JFiles.createTempDirectory("graft-pocbench")
       def stage(feed: String, name: String) = {

@@ -132,7 +132,7 @@ object PipelineQueries {
       val p = Fixtures.pipeline(
         java.nio.file.Paths.get(paths("barStock")).getParent, paths)
       val stockDf = p.barStock(s)
-      val (salesDf, _) = p.sales(s)
+      val salesDf = p.sales(s)
       val ck = p.cocktails(s, salesDf)
       p.pocAnalysis(salesDf, ck, stockDf)
     })
@@ -168,7 +168,7 @@ object PipelineQueries {
       // stream start, refreshed by restarting the stream, not silently
       // re-derived mid-flight.
       val stockDf = p.barStock(s).persist()
-      val (salesDf, _) = p.sales(s)
+      val salesDf = p.sales(s)
       val ck = p.cocktails(s, salesDf).persist()
       val dir = JFiles.createTempDirectory("graft-q147")
       def stage(feed: String, name: String) = {

@@ -24,9 +24,9 @@ object Clean {
     * build_database.py:88-90,168,220-222; SURVEY.md §1.2).
     */
   def lowercaseStrings(df: DataFrame): DataFrame =
-    df.schema.fields.foldLeft(df) { (d, f) =>
-      if (f.dataType == StringType) d.withColumn(f.name, lower(col(f.name))) else d
-    }
+    df.select(df.schema.fields.toSeq.map { f =>
+      if (f.dataType == StringType) lower(col(f.name)).as(f.name) else col(f.name)
+    }: _*)
 
   /** Deterministic 0-based surrogate keys in `sortCols` order — the
     * oracle-stable form of pandas reset_index (ref:

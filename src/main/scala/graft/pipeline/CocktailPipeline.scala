@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's end-to-end batch ETL, Spark-first (ref:
   * build_database.py:227-253 `main()`; SURVEY.md §3 E1-E3):
@@ -12,9 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * Inputs/outputs are paths + DataFrames; sinks are the caller's choice
   * (tests assert on DataFrames; `run` writes parquet tables). Every
-  * stage is lazy until a sink action — one QueryExecution per write,
-  * with Catalyst pushing the watermark filters into the CSV scans and
-  * broadcasting both dimension joins.
+  * stage is lazy until a sink action, with Catalyst pushing the
+  * watermark filters into the CSV scans and broadcasting both dimension
+  * joins. `run` launches no job that only re-derives what it already
+  * knows: warehouse reads declare their schemas, and row counts and
+  * watermark maxima are observed on the writes themselves.
   */
 final class CocktailPipeline(
     barStockPath: String,
@@ -39,11 +44,14 @@ final class CocktailPipeline(
 
   /** global_sales: per-city incremental load (strict-> watermark), 3-way
     * union, surrogate keys, lowercase (ref: build_database.py:95-170).
-    * Returns the batch plus the advanced watermarks (only advanced for
-    * non-empty city batches — SURVEY.md §8.6).
+    * Returns the batch; `run` advances the watermarks from maxima
+    * observed on its append (only for non-empty city batches — SURVEY.md
+    * §8.6).
     */
-  def sales(spark: SparkSession): (DataFrame, Map[String, String]) = {
-    val wm = Watermarks.read(watermarkPath)
+  def sales(spark: SparkSession): DataFrame =
+    salesAfter(spark, Watermarks.read(watermarkPath))
+
+  private def salesAfter(spark: SparkSession, wm: Map[String, String]): DataFrame = {
     val feeds = Seq(
       "BUDA_date_max" -> SalesSources.budapest(spark, budapestPath),
       "LON_date_max" -> SalesSources.london(spark, londonPath),
@@ -53,22 +61,13 @@ final class CocktailPipeline(
       key -> Watermarks.filterNewerThan(df, wm.get(key))
     }
     val unioned = filtered.map(_._2).reduce(_ unionByName _)
-    // the cleaned batch is consumed THREE times (watermark maxima, the
-    // per-key offset counts, the keyed numbering itself) and the gzip
-    // feeds are non-splittable — a lazy localCheckpoint parses them ONCE
-    // (the maxima job below materializes it) instead of one full
-    // single-task decompress per consumer. The incremental batch is
+    // the cleaned batch is consumed twice (the per-key offset counts and
+    // the keyed numbering itself) and the gzip feeds are non-splittable —
+    // a lazy localCheckpoint parses them ONCE, inside the first job that
+    // reads the batch (in `run`, the global_sales append), instead of one
+    // full single-task decompress per consumer. The incremental batch is
     // day-sized by contract, so the materialization is bounded.
     val cleaned = Clean.lowercaseStrings(unioned).localCheckpoint(false)
-    // all three per-city maxima in ONE job over the union
-    val barToKey = Map("budapest" -> "BUDA_date_max",
-      "london" -> "LON_date_max", "new york" -> "NYC_date_max")
-    val maxima = cleaned.groupBy(col("bar").as("b"))
-      .agg(max("dateOfSale").as("m")).collect()
-      .flatMap(r => Option(r.getTimestamp(1)).flatMap(ts =>
-        barToKey.get(r.getString(0)).map(_ -> ts.toString.stripSuffix(".0"))))
-      .toMap
-    val newWm = wm ++ maxima
     // saleID in (bar, dateOfSale, idx) order WITHOUT a data-sized global
     // window: number within (bar, sale-day) keyed windows and broadcast
     // per-key offsets — (bar, day) is a sort-prefix of (bar, dateOfSale),
@@ -79,7 +78,7 @@ final class CocktailPipeline(
       "saleID",
       Seq(col("bar"), to_date(col("dateOfSale"))),
       Seq(col("dateOfSale"), col("idx")))
-    (keyed.select("saleID", "dateOfSale", "drink", "price", "bar"), newWm)
+    keyed.select("saleID", "dateOfSale", "drink", "price", "bar")
   }
 
   /** cocktails: distinct drinks across city feeds → source lookup →
@@ -124,54 +123,75 @@ final class CocktailPipeline(
   /** Full run: load all three tables, write them + poc_analysis as
     * parquet under `warehouseDir`, advance the watermark file (ref:
     * build_database.py:227-253 plus the §8.3 fix — the reference never
-    * actually invoked poc_tables.sql).
+    * actually invoked poc_tables.sql). Returns the stored row count of
+    * every table.
     *
     * Sales APPEND across runs — that is the incremental contract
     * (README.md:20-22) — with saleIDs offset past the stored max so keys
     * stay unique across batches (the §8.5 fix; the reference restarts at
     * 0 and violates its own PK). Dimensions are snapshots: overwrite.
+    *
+    * Counts come from an `Observation` on each write, never from reading
+    * a table back; the global_sales count is the history aggregate's
+    * prior rows plus the appended rows, and the per-city watermark maxima
+    * are observed on that same append.
     */
   def run(spark: SparkSession, warehouseDir: String): Map[String, Long] = {
+    val wm = Watermarks.read(watermarkPath)
     val stockDf = barStock(spark)
-    val (salesDf, newWm) = sales(spark)
+    val salesDf = salesAfter(spark, wm)
 
-    def save(name: String, df: DataFrame, mode: String = "overwrite"): Long = {
-      df.write.mode(mode).parquet(s"$warehouseDir/$name")
-      spark.read.parquet(s"$warehouseDir/$name").count()
+    def read(name: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(s"$warehouseDir/$name")
+    /** Writes `df`; returns its row count and the `extra` metrics,
+      * observed by the write job itself. */
+    def save(name: String, df: DataFrame, mode: String = "overwrite",
+        extra: Seq[Column] = Nil): Map[String, Any] = {
+      val obs = Observation()
+      df.observe(obs, count(lit(1)).as("rows"), extra: _*)
+        .write.mode(mode).parquet(s"$warehouseDir/$name")
+      obs.get
     }
-    val salesPath = s"$warehouseDir/global_sales"
+    def rows(m: Map[String, Any]): Long = m("rows").asInstanceOf[Long]
     // existence via the Hadoop FS API, not java.nio — the warehouse may
     // be hdfs:///s3a://, where a local-path check would silently say "no"
     // and restart saleIDs at 0 (the §8.5 PK violation this offset fixes)
-    val hPath = new org.apache.hadoop.fs.Path(salesPath)
+    val hPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/global_sales")
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keyOffset =
-      if (fs.exists(hPath))
-        spark.read.parquet(salesPath).agg(max("saleID")).first().getAs[Any](0) match {
-          case null => 0L
-          case m: Long => m + 1
-        }
-      else 0L
-    val salesCount = save("global_sales",
-      salesDf.withColumn("saleID", col("saleID") + keyOffset), "append")
+    // stored rows and the next free saleID in one aggregate
+    val (priorRows, keyOffset) =
+      if (fs.exists(hPath)) {
+        val h = read("global_sales", Schemas.globalSales)
+          .agg(count(lit(1)), max("saleID")).first()
+        (h.getLong(0), if (h.isNullAt(1)) 0L else h.getLong(1) + 1)
+      } else (0L, 0L)
+    val barToKey = Seq("budapest" -> "BUDA_date_max",
+      "london" -> "LON_date_max", "new york" -> "NYC_date_max")
+    val appended = save("global_sales",
+      salesDf.withColumn("saleID", col("saleID") + keyOffset), "append",
+      barToKey.map { case (bar, key) =>
+        max(when(col("bar") === bar, col("dateOfSale"))).as(key) })
+    // a city with no new rows observes null and keeps its old watermark
+    val maxima = barToKey.flatMap { case (_, key) =>
+      Option(appended(key).asInstanceOf[Timestamp]).map(key -> _.toString.stripSuffix(".0"))
+    }
     // advance watermarks IMMEDIATELY after the sales append commits: a
     // crash in the dimension/poc writes below must not leave old
     // watermarks pointing at already-appended rows (next run would
     // re-append them as undetectable duplicates under fresh saleIDs)
-    Watermarks.write(watermarkPath, newWm)
+    Watermarks.write(watermarkPath, wm ++ maxima)
     // dim terms come from ALL stored sales, not just this batch — an
     // empty incremental batch must not shrink the cocktails snapshot
-    val allSales = spark.read.parquet(salesPath)
     val counts = Map(
-      "bar_stock" -> save("bar_stock", stockDf),
-      "global_sales" -> salesCount,
-      "cocktails" -> save("cocktails", cocktails(spark, allSales)))
+      "bar_stock" -> rows(save("bar_stock", stockDf)),
+      "global_sales" -> (priorRows + rows(appended)),
+      "cocktails" -> rows(save("cocktails",
+        cocktails(spark, read("global_sales", Schemas.globalSales)))))
     // poc reads the saved tables (CTAS-equivalent) so it sees all batches
     val poc = pocAnalysis(
-      spark.read.parquet(salesPath),
-      spark.read.parquet(s"$warehouseDir/cocktails"),
-      spark.read.parquet(s"$warehouseDir/bar_stock"))
-    val pocCount = save("poc_analysis", poc)
-    counts + ("poc_analysis" -> pocCount)
+      read("global_sales", Schemas.globalSales),
+      read("cocktails", Schemas.cocktails),
+      read("bar_stock", Schemas.barStock))
+    counts + ("poc_analysis" -> rows(save("poc_analysis", poc)))
   }
 }

@@ -43,6 +43,14 @@ object Schemas {
     StructField("stock", IntegerType),
     StructField("bar", StringType)))
 
+  /** One drink object as the search API returns it: the 7 projected
+    * fields, all strings (ref: build_database.py:28-46). Fields beyond
+    * these are never read.
+    */
+  val apiDrink: StructType = StructType(
+    Seq("idDrink", "strDrink", "strCategory", "strIBA", "strAlcoholic", "strGlass",
+      "dateModified").map(StructField(_, StringType)))
+
   /** The 7 projected cocktail-dimension columns (ref:
     * database/data_tables.sql:23-31, projection at
     * build_database.py:187-197).

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
-import java.sql.Timestamp
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,9 +52,18 @@ object Watermarks {
       }.toMap
   }
 
+  /** Replaces the state file whole: the body goes to a sibling temp file
+    * that is then renamed over `path` atomically, so a crash mid-write
+    * leaves either the old file or the new one, never a truncated one.
+    */
   def write(path: String, wm: Map[String, String]): Unit = {
     val body = Keys.flatMap(k => wm.get(k).map(v => s"$k $v")).mkString("\n") + "\n"
-    Files.writeString(Paths.get(path), body)
+    val target = Paths.get(path).toAbsolutePath
+    val tmp = Files.createTempFile(target.getParent, s".${target.getFileName}", ".tmp")
+    try {
+      Files.writeString(tmp, body)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Strict-> incremental filter on `dateOfSale` — Catalyst pushes this
@@ -64,11 +72,4 @@ object Watermarks {
   def filterNewerThan(df: DataFrame, watermark: Option[String]): DataFrame =
     df.filter(col("dateOfSale") >
       lit(watermark.getOrElse(Epoch)).cast("timestamp"))
-
-  /** New watermark value for a filtered batch: max(dateOfSale), or None
-    * when the batch is empty (caller keeps the old value — §8.6 fix).
-    */
-  def batchMax(df: DataFrame): Option[String] =
-    Option(df.agg(max("dateOfSale")).first().getAs[Timestamp](0))
-      .map(_.toString.stripSuffix(".0"))
 }

@@ -27,7 +27,7 @@ class SalesStreamSpec extends SparkSpec {
 
     // batch ground truth: same fixtures, same dims
     val stockDf = pipe.barStock(spark)
-    val (batchSales, _) = pipe.sales(spark)
+    val batchSales = pipe.sales(spark)
     val cocktailsDf = pipe.cocktails(spark, batchSales)
     val expected = pipe.pocAnalysis(batchSales, cocktailsDf, stockDf)
       .collect().map(key).toSet
