@@ -63,8 +63,8 @@ object Components {
     sym.unpersist(blocking = false)
     if (!converged)
       // truncated labels would silently split one true cluster into
-      // several "keepers" — surface it loudly instead
-      System.err.println(s"[graft] connectedComponents did NOT converge in " +
+      // several "keepers" — fail instead of returning them
+      throw new IllegalStateException(s"[graft] connectedComponents did NOT converge in " +
         s"$maxIters iterations — labels are an upper bound on the true " +
         s"components (clusters deeper than $maxIters hops are split); " +
         s"re-run with a larger maxIters")
@@ -165,7 +165,7 @@ object Components {
       curPot = nextPot
     }
     if (!converged)
-      System.err.println(s"[graft] connectedComponentsStar did NOT converge " +
+      throw new IllegalStateException(s"[graft] connectedComponentsStar did NOT converge " +
         s"in $maxIters alternation rounds — labels may split deep clusters; " +
         s"re-run with a larger maxIters")
     (e, rounds)

@@ -157,8 +157,7 @@ object PipelineQueries {
       val stable = Fixtures.stable
       val p = Fixtures.pipeline(
         JPaths.get(stable("barStock")).getParent, stable)
-      // PIN the static sides (round-13 shave, found by StreamPocBench's
-      // lifecycle decomposition): a stream-static join re-evaluates the
+      // PIN the static sides: a stream-static join re-evaluates the
       // static plan EVERY micro-batch, and ck is the pipeline's most
       // expensive fragment (fuzzy-search join + keep-newest dedup) — the
       // two-batch lifecycle paid it twice more on top of the eager

@@ -26,6 +26,17 @@ class ComponentsSpec extends SparkSpec {
     assert(got == ((1L, 1L)))
   }
 
+  test("a loop that does not converge throws instead of returning split labels") {
+    val vertices = (1 to 12).map(_.toLong).toDF("id")
+    val edges = (1 until 12).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
+    val minLabel = intercept[IllegalStateException](
+      Components.connectedComponents(vertices, edges, maxIters = 1))
+    assert(minLabel.getMessage.contains("did NOT converge in 1 iterations"))
+    val star = intercept[IllegalStateException](
+      Components.connectedComponentsStar(vertices, edges, maxIters = 1))
+    assert(star.getMessage.contains("did NOT converge in 1 alternation rounds"))
+  }
+
   test("q56 dedup clusters covers every doc and keepers are cluster minima") {
     val df = SparkEntry.queries("q56_dedup_clusters")(spark, "/root/testdata/sf0.001")
       .cache()

@@ -21,6 +21,28 @@ class ReadmeLedgerSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"README says '${m.matched}' but SparkEntry has $oracled of $total")
   }
 
+  test("every runMain the docs and usage lines cite names a class with a static main") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def walk(dir: String, ext: String): Seq[Path] = {
+      val s = Files.walk(Paths.get(dir))
+      try s.iterator().asScala.filter(_.toString.endsWith(ext)).toList finally s.close()
+    }
+    // historical records (BASELINE.md, VERDICT.md, CHANGES.md, ...) may
+    // name mains that no longer exist; the runnable docs may not
+    val files = Seq(Paths.get("README.md"), Paths.get(".claude/skills/verify/SKILL.md"))
+      .filter(Files.exists(_)) ++ walk("docs", ".md") ++ walk("src/main", ".scala")
+    val cited = files.flatMap { f =>
+      """runMain (graft\.[\w.]*\w)""".r.findAllMatchIn(Files.readString(f)).map(f -> _.group(1))
+    }
+    assert(cited.map(_._2).toSet.contains("graft.tools.Inspect"), cited)
+    val broken = cited.filterNot { case (_, cls) =>
+      scala.util.Try(Class.forName(cls).getMethod("main", classOf[Array[String]]))
+        .toOption.exists(m => java.lang.reflect.Modifier.isStatic(m.getModifiers))
+    }
+    assert(broken.isEmpty, s"cited mains that do not exist: $broken")
+  }
+
   test("the rows-only set is EMPTY — every query carries a DuckDB oracle") {
     // q25/q51/q55 left this set in round 12 (portable re-key); q72
     // (byte-stripe stub features) and q76 (stable-fixture DSv2 replay)

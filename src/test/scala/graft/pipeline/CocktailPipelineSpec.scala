@@ -2,14 +2,11 @@ package graft.pipeline
 
 import java.nio.file.Files
 import java.sql.Date
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
+import graft.tools.Inspect
 
 /** End-to-end reference-parity pipeline test: golden poc_analysis rows,
   * dirty-data cleaning, fuzzy-search enrichment + keep-newest dedup, and
@@ -159,31 +156,9 @@ class CocktailPipelineSpec extends SparkSpec {
 
   test("one fixture run launches at most the pinned number of Spark jobs") {
     val (dir, _, pipe) = freshRun()
-    val sc = spark.sparkContext
-    val group = s"pipeline-jobs-${java.util.UUID.randomUUID()}"
-    val marker = group + "-marker"
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case `marker` => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "CocktailPipeline.run")
-      try pipe.run(spark, s"$dir/warehouse") finally sc.clearJobGroup()
-      // the listener bus delivers events in order: once a marker job
-      // launched after the run is seen, every job of the run was counted
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
+    val (_, counts) = Inspect.collect(spark)(pipe.run(spark, s"$dir/warehouse"))
     // 19 measured on local[4]; a read that infers a schema, a count
     // that reads a table back or a separate maxima job each adds jobs
-    assert(jobs.get() <= 19, s"${jobs.get()} jobs")
+    assert(counts.jobs <= 19, s"${counts.jobs} jobs")
   }
 }
