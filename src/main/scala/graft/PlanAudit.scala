@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 /** Shared physical-plan predicates for the bucketed-artifact contract —
-  * ONE definition consumed by PlanCheck and the artifact specs, so a
+  * ONE definition consumed by PlanShapeSpec and the artifact specs, so a
   * future strengthening (e.g. also rejecting a Sort above single-file
   * buckets, or unwrapping AQE query stages) cannot silently apply to
   * one copy and not the others.
@@ -31,13 +31,6 @@ object PlanAudit {
   def hasBucketedSmj(p: SparkPlan): Boolean =
     p.collect { case j: SortMergeJoinExec => j }
       .exists(j => Seq(j.left, j.right).exists(bucketedExchangeFreeSide))
-
-  /** EVERY SortMergeJoin in the plan has a bucketed exchange-free side
-    * (the negative guard: no OTHER, shuffle-requiring sort-merge join
-    * crept into a plan where only the artifact self-join is sanctioned). */
-  def allSmjBucketed(p: SparkPlan): Boolean =
-    p.collect { case j: SortMergeJoinExec => j }
-      .forall(j => Seq(j.left, j.right).exists(bucketedExchangeFreeSide))
 
   /** The broadcast-side discipline, generalized (the q153 lesson, then
     * re-learned on q136/q154/q155): a side the developer FORCED to
@@ -65,7 +58,8 @@ object PlanAudit {
     * cluster-size table) still slips through — cardinality is not a
     * plan-shape property — so reviews still matter; this predicate
     * mechanizes the CATEGORICAL mistake (raw corpus projection under a
-    * forced broadcast) that has now been made three times. */
+    * forced broadcast) that has now been made three times. PlanShapeSpec
+    * runs it over every registered query. */
   def boundedBroadcasts(p: LogicalPlan): Boolean =
     unboundedCorpusBroadcasts(p).isEmpty
 
@@ -130,7 +124,7 @@ object PlanAudit {
     * partition — the contiguousId offsets prefix-sum). Anything
     * vocab-/pair-/data-GROWING must instead use Clean.keyedGroupRank,
     * which leaves NO zero-key window in the plan (q329's form).
-    * PlanCheck's sweep fails on any site not listed here.
+    * PlanShapeSpec's sweep fails on any site not listed here.
     */
   val zeroKeyWindowAllowlist: Map[String, String] = Map(
     "q07_surrogate_key" ->

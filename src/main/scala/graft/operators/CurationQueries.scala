@@ -208,8 +208,8 @@ object CurationQueries {
     * runtime-derived month set (months with 2001 urgent orders) that no
     * static rewrite can see. Catalyst inserts a DPP subquery into the
     * fact scan's PartitionFilters, so at 100 TB the scan opens only the
-    * joined months' directories instead of all of them — asserted in
-    * PlanCheck. The layout is written once per JVM (the write itself is
+    * joined months' directories instead of all of them — pinned in the
+    * plan-shape record (PlanShapeSpec). The layout is written once per JVM (the write itself is
     * q29's benchmark, not this one's).
     */
   val q121 = QueryDef.oracle("q121_dpp_join",

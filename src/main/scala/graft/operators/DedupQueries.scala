@@ -68,7 +68,7 @@ object DedupQueries {
     * which therefore agree with this query's keys by construction).
     * Gram-less docs carry NULL signatures in both engines. The
     * signature pass is still one shuffle-free codegen'd scan
-    * (PlanCheck-asserted). */
+    * (pinned in the plan-shape record). */
   val q51 = QueryDef.oracle("q51_minhash_signatures", {
     val bandCols = (0 until PortBands).map { j =>
       val (m0, m1, m2) = (s"mh${3 * j}", s"mh${3 * j + 1}", s"mh${3 * j + 2}")
@@ -677,7 +677,7 @@ object DedupQueries {
     }
 
   /** The banding join of q148 (batch bands → stored index), exposed
-    * separately so PlanCheck can audit the exchange-free bucketed index
+    * separately so PlanShapeSpec can audit the exchange-free bucketed index
     * side on the join's own DataFrame (in q148's final plan the join
     * sits inside a BroadcastExchange build subtree). Batch bands are
     * computed from the NEW docs only: the increment never scans the
@@ -705,7 +705,7 @@ object DedupQueries {
     * table is built ONCE per (JVM, sf-dir) by [[storedBandIndex]] and
     * persisted bucketed+sorted on (band, digest) — every q148 run reads
     * it back, so the banding join's index side is a bucketed scan with
-    * NO Exchange (PlanCheck tree-asserts this; the merge hint pins the
+    * NO Exchange (PlanShapeSpec tree-asserts this; the merge hint pins the
     * zip-into-buckets shape AQE would otherwise demote at toy sizes).
     * Each increment pays signatures + shuffle for the BATCH only — the
     * index never re-hashes, never re-shuffles, and batch×batch /
@@ -776,8 +776,8 @@ object DedupQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
       // LIVE banding join on purpose (not the stored pair artifact):
-      // q99 is the plan-proof query — PlanCheck asserts candidate
-      // generation stays an exchange-free bucketed self-join here
+      // q99 is the plan-proof query — its plan-shape record pins candidate
+      // generation as a bucketed self-join with no exchange on either side
       val pairs = bandingPairs(s, d)
       val partners = pairs.select(col("ia").as("doc_id"), col("ib").as("p"))
         .unionByName(pairs.select(col("ib").as("doc_id"), col("ia").as("p")))
@@ -3615,8 +3615,8 @@ object DedupQueries {
     * DISTINCT windows (= distinct suffix ranks — the property the
     * doubling must get exactly right), and duplicated-position mass.
     * The DuckDB oracle is INDEPENDENT-ALGORITHM (q329's discipline):
-    * it groups the actual token-array slices by value. PlanCheck
-    * asserts the chain shape here: NO zero-key window, no cartesian,
+    * it groups the actual token-array slices by value. The plan-shape
+    * record pins the chain shape here: NO zero-key window, no cartesian,
     * and no broadcast of the data-growing vocab rank table. Scale
     * shape: one scan → 2 rounds of {(doc,pos)-keyed shift join +
     * distinct-pair renumber} → rank-keyed rollup. Output: one row per

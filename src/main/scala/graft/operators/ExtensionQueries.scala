@@ -212,7 +212,7 @@ object ExtensionQueries {
     * artifact built once per corpus, the store-don't-recompute rule):
     * the query — and the bench — pay the pruned read only; the write
     * path is LayoutSpec's. The partition filter must land as the scan's
-    * PartitionFilters (directory pruning, PlanCheck-asserted), and the
+    * PartitionFilters (directory pruning, pinned in the plan-shape record), and the
     * oracle runs the same filter on the raw table — layout must never
     * change results, only the bytes read.
     */

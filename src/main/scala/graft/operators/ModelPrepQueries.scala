@@ -1997,7 +1997,7 @@ object ModelPrepQueries {
     * scans' worth of explode+shuffle for a 21-row answer): the add-1
     * unigram LM this trains per variant is algebraically subtractive,
     * so ONE (source, split, tok) rollup — the query's single corpus
-    * token scan, PlanCheck-asserted as the plan's only Generate —
+    * token scan, asserted by PlanShapeSpec as the plan's only Generate —
     * yields every variant exactly: c_drop_s(tok) = c_all(tok) −
     * c_s(tok), t_drop_s = t_all − t_s, n_docs_drop_s = n_all − n_s
     * (the 'all' row is the rollup's own grand total), and the
@@ -2061,7 +2061,7 @@ object ModelPrepQueries {
 
   /** q344's builder, pin-parameterized: the query runs with every shared
     * fragment pinned (lazy localCheckpoint — the rollup, the axis, and
-    * the report table each compute once); PlanCheck audits the UNPINNED
+    * the report table each compute once); PlanShapeSpec audits the UNPINNED
     * form, where the whole lineage is one visible tree, to assert the
     * subtractive shape mechanically: exactly ONE Generate (= one corpus
     * token scan) in the entire plan. */

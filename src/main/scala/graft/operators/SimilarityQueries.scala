@@ -3423,11 +3423,11 @@ object SimilarityQueries {
         .filter(col("a.vec_id") < col("a.nn_id"))
         .select(col("a.vec_id").as("vec_a"), col("a.nn_id").as("vec_b"))
       val lab = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
+      // unhinted: `lab` is a bare corpus projection, which PlanAudit.boundedBroadcasts
+      // forbids forcing into a broadcast
       mut
-        .join(broadcast(lab.select(col("vec_id").as("vec_a"),
-          col("label").as("label_a"))), Seq("vec_a"))
-        .join(broadcast(lab.select(col("vec_id").as("vec_b"),
-          col("label").as("label_b"))), Seq("vec_b"))
+        .join(lab.select(col("vec_id").as("vec_a"), col("label").as("label_a")), Seq("vec_a"))
+        .join(lab.select(col("vec_id").as("vec_b"), col("label").as("label_b")), Seq("vec_b"))
         .select(col("vec_a"), col("vec_b"), col("label_a"), col("label_b"),
           (col("label_a") === col("label_b")).as("same_label"))
     })

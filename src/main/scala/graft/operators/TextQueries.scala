@@ -598,8 +598,8 @@ object TextQueries {
     * plus the fold application, so the trainer that ships the artifact
     * and the fold apply cannot disagree without a hash mismatch. The
     * `size(ms) = BpeTrainK` guard mirrors the oracle's FROM-every-
-    * display emptiness convention on degenerate corpora. PlanCheck pins
-    * the one-scan apply plan. HASH-MATCHED.
+    * display emptiness convention on degenerate corpora. The plan-shape
+    * record pins the one-scan apply plan. HASH-MATCHED.
     */
   val q168 = QueryDef.oracle("q168_bpe_fold_apply",
     bpeApplyCtesK(BpeTrainK))(

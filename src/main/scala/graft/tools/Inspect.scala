@@ -7,17 +7,17 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import graft.{GraftSession, PlanAudit, SparkEntry}
+import graft.{GraftSession, PlanAudit, PlanShape, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Diagnostics for registered queries over `SPARK_GRAFT_SF_DIR` (default sf0.1):
   *
-  *   plan — the `FormattedMode` plan, the physical class tree with scan bucketing and
-  *          partitioning, and every broadcast build side that
-  *          `PlanAudit.unboundedCorpusBroadcasts` flags; `--out <dir>` writes `<dir>/<q>.txt`.
+  *   plan — the `FormattedMode` plan, its `PlanShape` (one `fact<TAB>count` line each),
+  *          and every broadcast build side that `PlanAudit.unboundedCorpusBroadcasts`
+  *          flags; `--out <dir>` writes `<dir>/<q>.txt`.
   *   time — one warm-up, then three reps split into construct (driver jobs the query fn
   *          runs), plan and exec seconds; then the three reps' jobs, stages, tasks, task
   *          run and CPU seconds, the top 5 stages by CPU, and the per-trigger
@@ -96,16 +96,8 @@ object Inspect {
     names.foreach { n =>
       val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
       val sb = new StringBuilder(qe.explainString(FormattedMode))
-      sb ++= "\n=== sparkPlan tree (class names) ===\n"
-      def walk(p: SparkPlan, ind: Int): Unit = {
-        sb ++= "  " * ind + p.getClass.getSimpleName + (p match {
-          case sc: FileSourceScanExec =>
-            s" bucketSpec=${sc.relation.bucketSpec.isDefined} out=${sc.outputPartitioning}"
-          case _ => ""
-        }) + "\n"
-        p.children.foreach(walk(_, ind + 1))
-      }
-      walk(qe.sparkPlan, 0)
+      sb ++= "\n=== plan shape ===\n"
+      PlanShape.of(qe.executedPlan).foreach { case (f, c) => sb ++= s"$f\t$c\n" }
       sb ++= "=== unbounded corpus broadcasts ===\n"
       PlanAudit.unboundedCorpusBroadcasts(qe.optimizedPlan).foreach { b =>
         sb ++= b.treeString.linesIterator.take(12).mkString("", "\n", "\n-----\n")

@@ -93,11 +93,4 @@ class KeyedNumberingSpec extends SparkSpec {
       assert(g.toSeq == e.toSeq, s"ntile closed form diverged at n=$n")
     }
   }
-
-  test("the PlanCheck allowlist names only live queries") {
-    // a renamed/deleted query must not leave a stale allowlist row
-    // (AdviceLedgerSpec's hygiene contract, applied to verdict #4)
-    val stale = PlanAudit.zeroKeyWindowAllowlist.keySet -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"stale zero-key allowlist entries: $stale")
-  }
 }
