@@ -50,14 +50,15 @@ object StreamGateBench {
     def measure[T](name: String, feed: Seq[T],
         start: MemoryStream[T] => Dataset[_])(
         implicit enc: org.apache.spark.sql.Encoder[T]): Unit = {
-      // q147's state-partition fix (PipelineQueries q147): each stateful
-      // operator allocates one state-store partition per shuffle
-      // partition PER micro-batch — 32 of them for ~1k rows of state is
-      // pure checkpoint overhead that buries the signal this table
-      // exists to watch (state-SIZE drift). The gate stream runs at 4;
-      // the partition count is fixed at first start per query, and the
-      // conf stays lowered until the stream STOPS (start() is async —
-      // restoring earlier could race the first micro-batch's planning).
+      // each stateful operator allocates one state-store partition per
+      // shuffle partition PER micro-batch — 32 of them for ~1k rows of
+      // state is pure checkpoint overhead that buries the signal this
+      // table exists to watch (state-SIZE drift). The gate stream runs at
+      // 4, which spreads ~1k rows of state over the cores; q147, whose
+      // state is a handful of open days, runs at 1. The partition count is
+      // fixed at first start per query, and the conf stays lowered until
+      // the stream STOPS (start() is async — restoring earlier could race
+      // the first micro-batch's planning).
       val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       try {

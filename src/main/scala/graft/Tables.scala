@@ -78,7 +78,11 @@ object Tables {
     * round-robin) so row placement is a pure function of the data
     * (partition-invariance, retry-safety — guide §2.5 on rand-derived
     * keys), and by doc_id so AQE/downstream keyed ops see a real
-    * clustering. */
+    * clustering. Sized by `spark.sql.shuffle.partitions`, not by the
+    * core count: a downstream join or aggregate on the same key then
+    * reuses the floor's partitioning, while a floor of another count
+    * would be shuffled again (one more exchange and sort per consumer
+    * when the two counts differ, as on a cluster). */
   private[graft] def parallelScan(spark: SparkSession, path: String,
       df: DataFrame, key: String): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
@@ -100,7 +104,9 @@ object Tables {
       val st = fs.getFileStatus(p)
       st.isFile && st.getLen <= splitBytes
     } catch { case _: Throwable => false }
-    if (cores > 1 && singleSplit) df.repartition(cores, col(key)) else df
+    if (cores > 1 && singleSplit)
+      df.repartition(spark.sessionState.conf.numShufflePartitions, col(key))
+    else df
   }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object HashFunctions {
 
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.Expression
 
   /** Extract an integer literal argument with a usable error instead of a
@@ -74,29 +75,26 @@ object HashFunctions {
         UnigramSegment(exprs.head, exprs(1), exprs(2))
       }))
 
-  // sessions already registered — weak keys so dropped sessions don't leak
-  private val registered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Register every text-hash function in the session's temp registry —
-    * for sessions not built with `spark.sql.extensions=graft.GraftExtensions`
-    * that still want the SQL names (e.g. LATERAL VIEW ngram_explode).
-    * Idempotent, and guarded so per-Column-construction calls don't
-    * hammer the registry. */
-  def registerAll(spark: SparkSession): Unit = {
-    if (registered.add(spark)) {
-      val reg = spark.sessionState.functionRegistry
-      sqlBuilders.foreach { case (name, _, builder) =>
+  /** Registers each of `builders` that the session's function registry
+    * lacks. A session built with `GraftExtensions`, or one that registered
+    * them before, is left untouched, so a per-Column-construction call
+    * costs one lookup per name and replaces nothing. */
+  private[functions] def registerMissing(spark: SparkSession,
+      builders: Seq[(String, String, Seq[Expression] => Expression)]): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    builders.foreach { case (name, _, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
     }
   }
 
-  private def registerOnce(spark: SparkSession): Unit = registerAll(spark)
+  /** Register every text-hash function in the session's temp registry —
+    * for sessions not built with `spark.sql.extensions=graft.GraftExtensions`
+    * that still want the SQL names (e.g. LATERAL VIEW ngram_explode). */
+  def registerAll(spark: SparkSession): Unit = registerMissing(spark, sqlBuilders)
 
   private def native(name: String, cols: Column*): Column = {
-    registerOnce(SparkSession.active)
+    registerAll(SparkSession.active)
     call_function(name, cols: _*)
   }
 

@@ -281,7 +281,7 @@ object VecCentroidD2 {
 
 /** Registration + Column-API access. Queries call [[registerOnce]] at
   * build time so the expressions resolve in whatever session the driver
-  * hands us; registration is idempotent.
+  * hands us; a session that already has them is left untouched.
   */
 object VecExpressions {
   import org.apache.spark.sql.catalyst.expressions.Expression
@@ -318,12 +318,7 @@ object VecExpressions {
         VecCentroidD2(exprs.head, exprs(1), exprs(2))
       }))
 
-  def registerOnce(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    sqlBuilders.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
+  def registerOnce(spark: SparkSession): Unit = HashFunctions.registerMissing(spark, sqlBuilders)
 
   def dotFast(spark: SparkSession, a: Column, b: Column): Column = {
     registerOnce(spark); call_function("vec_dot", a, b)

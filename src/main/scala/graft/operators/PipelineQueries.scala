@@ -143,13 +143,20 @@ object PipelineQueries {
     * 1-day tumbling aggregation, stream-static broadcast dimension joins,
     * run to completion in-process. Append mode only emits a day once the
     * watermark closes it, and a watermark computed at the end of one
-    * micro-batch finalizes windows in the NEXT — so two late sentinel
-    * files are dropped into a COPY of the feed dir (never the shared
-    * stable dir) to flush every real day, then filtered back out. The
-    * emitted rows are hash-matched against the SAME DuckDB oracle as
-    * q131: streaming ≡ batch is a driver-checked fact, not just
-    * `SalesStreamSpec`'s assertion. State at scale: one row per open
-    * (day, group), evicted at the watermark — see SalesStream's scaladoc.
+    * micro-batch finalizes windows in the NEXT. So one late sentinel file
+    * is staged with the feeds, in a COPY of the feed dir (never the shared
+    * stable dir): the data batch moves the watermark past every real day,
+    * and Spark's no-data micro-batch
+    * (`spark.sql.streaming.noDataMicroBatches.enabled`, on by default),
+    * which runs because the watermark moved, emits them all. That is two
+    * triggers; `processAllAvailable` returns only after the no-data batch,
+    * since Spark counts the stream idle once no batch, with or without
+    * data, is left to run. The sentinel's own window stays open, so it is
+    * never emitted. The emitted rows are hash-matched against the SAME
+    * DuckDB oracle as q131: streaming ≡ batch is an oracle-checked fact,
+    * not just `SalesStreamSpec`'s assertion. State at scale: one row per
+    * open (day, group), evicted at the watermark — see SalesStream's
+    * scaladoc.
     */
   val q147 = QueryDef.oracle("q147_streaming_poc", pocOracleSql)(
     (s, _) => {
@@ -160,7 +167,7 @@ object PipelineQueries {
       // PIN the static sides: a stream-static join re-evaluates the
       // static plan EVERY micro-batch, and ck is the pipeline's most
       // expensive fragment (fuzzy-search join + keep-newest dedup) — the
-      // two-batch lifecycle paid it twice more on top of the eager
+      // two-trigger lifecycle paid it twice more on top of the eager
       // construction here. persist() materializes it once inside the
       // first micro-batch; unpersisted after the stream stops. This is
       // also the production contract: a pinned dimension snapshot per
@@ -178,10 +185,9 @@ object PipelineQueries {
       val buda = stage("budapest", "budapest.csv.gz")
       val lon = stage("london", "london.csv.gz")
       val ny = stage("ny", "ny.csv.gz")
-      // first late sentinel is PRE-staged: the initial micro-batch then
-      // already advances the watermark past every real day, and a single
-      // follow-up sentinel batch flushes them — one fewer streaming
-      // round-trip than writing both sentinels after the fact
+      // the sentinel is staged with the feeds: the data batch moves the
+      // watermark to a day past every real day, and the no-data batch
+      // that follows emits them
       JFiles.write(buda.resolve("late1.csv"),
         ",TS,ital,k\n0,2021-06-01 00:00:00,zzz-sentinel,1.0\n".getBytes("UTF-8"))
       val stream = graft.streaming.SalesStream.feed(s, buda.toString, "budapest")
@@ -189,26 +195,18 @@ object PipelineQueries {
         .unionByName(graft.streaming.SalesStream.feed(s, ny.toString, "new york"))
       // unique sink name: bench/invariance runs invoke this repeatedly
       val table = "poc_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // the windowed agg allocates one state-store partition per shuffle
-      // partition PER micro-batch — 32 of them for a handful of open days
-      // is pure checkpoint overhead, so the stream itself runs at 4
-      // (restored after; state count is a per-query constant fixed at
-      // first start, which is also why this can't be a global default)
+      // the windowed agg allocates one state store per shuffle partition
+      // PER micro-batch, and a handful of open days fits one, so the
+      // stream runs on 1 (restored after; the state partition count is a
+      // per-query constant fixed at first start, which is also why this
+      // can't be a global default)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      s.conf.set("spark.sql.shuffle.partitions", "1")
       try {
         val q = graft.streaming.SalesStream
           .incrementalPoc(stream, ck, stockDf, watermark = "1 day")
           .writeStream.format("memory").queryName(table).outputMode("append").start()
-        try {
-          q.processAllAvailable()
-          // second sentinel arrives as its own batch: the watermark the
-          // first batch computed (past all real days) finalizes every
-          // real window while this batch runs
-          JFiles.write(buda.resolve("late2.csv"),
-            ",TS,ital,k\n0,2021-09-01 00:00:00,zzz-sentinel,1.0\n".getBytes("UTF-8"))
-          q.processAllAvailable()
-        } finally q.stop()
+        try q.processAllAvailable() finally q.stop()
         // conf stays lowered until the stream STOPS: start() is async, so
         // restoring earlier could race the first micro-batch's planning
       } finally {
@@ -227,6 +225,8 @@ object PipelineQueries {
           finally walk.close()
         } catch { case _: Throwable => () }
       }
+      // a guard: the sentinel's window never closes, so no sentinel row
+      // reaches the sink
       s.table(table).filter(col("drink") =!= "zzz-sentinel")
     })
 

@@ -2,16 +2,17 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Phaser, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, Phaser, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import graft.{GraftSession, PlanAudit, PlanShape, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Diagnostics for registered queries over `SPARK_GRAFT_SF_DIR` (default sf0.1):
   *
@@ -20,8 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *          flags; `--out <dir>` writes `<dir>/<q>.txt`.
   *   time — one warm-up, then three reps split into construct (driver jobs the query fn
   *          runs), plan and exec seconds; then the three reps' jobs, stages, tasks, task
-  *          run and CPU seconds, the top 5 stages by CPU, and the per-trigger
-  *          `durationMs`, summed per key, of every stream the query starts.
+  *          run and CPU seconds, codegen compiles, the top 5 stages by CPU, and, for
+  *          every stream the query starts, one line per trigger (input rows, watermark,
+  *          state rows and stores, `durationMs`) and the `durationMs` summed per key.
   *
   * Usage: runMain graft.tools.Inspect <plan|time> <q…> [--out <dir>]
   */
@@ -29,12 +31,19 @@ object Inspect {
 
   final case class Stage(id: Int, name: String, tasks: Int, runMs: Long, cpuNs: Long)
 
-  /** What the jobs of one `collect` scope ran. `streamMs` sums
-    * `StreamingQueryProgress.durationMs` per key over `triggers`. */
-  final case class Counts(jobs: Int, stages: Seq[Stage], streamMs: Map[String, Long], triggers: Int) {
+  /** What the jobs of one `collect` scope ran. `progress` holds one entry per stream
+    * trigger, in order; `compiles` counts the generated classes compiled, i.e. the codegen
+    * cache's misses. */
+  final case class Counts(jobs: Int, stages: Seq[Stage], progress: Seq[StreamingQueryProgress],
+      compiles: Long) {
     def tasks: Int = stages.map(_.tasks).sum
     def taskRunS: Double = stages.map(_.runMs).sum / 1e3
     def taskCpuS: Double = stages.map(_.cpuNs).sum / 1e9
+    def triggers: Int = progress.size
+    /** `StreamingQueryProgress.durationMs`, summed per key over the triggers. */
+    def streamMs: Map[String, Long] =
+      progress.flatMap(_.durationMs.asScala.map { case (k, v) => k -> v.toLong })
+        .groupMapReduce(_._1)(_._2)(_ + _)
   }
 
   private val ScopeKey = "graft.inspect.scope"
@@ -43,14 +52,15 @@ object Inspect {
     * stream started inside it. The scope is a local property, not the job group, which a
     * stream swaps for its run id while keeping the rest. The listener bus delivers events
     * in order, so once a marker job launched after `body` is seen, every job of `body`
-    * was counted; a stream's progress is complete once its termination arrives. */
+    * was counted; a stream's progress is complete once its termination arrives. The
+    * compile count is JVM-wide: it includes compiles of work running beside `body`. */
   def collect[A](spark: SparkSession)(body: => A): (A, Counts) = {
     val sc = spark.sparkContext
     val scope = s"inspect-${UUID.randomUUID()}"
     val stages = new ConcurrentHashMap[Int, Stage]
-    val streamMs = new ConcurrentHashMap[String, Long]
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]
     val runIds = ConcurrentHashMap.newKeySet[UUID]
-    val jobs = new AtomicInteger; val triggers = new AtomicInteger
+    val jobs = new AtomicInteger
     val markerSeen = new CountDownLatch(1); val streamsOpen = new Phaser(1)
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -71,24 +81,23 @@ object Inspect {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         if (sc.getLocalProperty(ScopeKey) == scope) { streamsOpen.register(); runIds.add(e.runId) }
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (runIds.contains(e.progress.runId)) {
-          triggers.incrementAndGet()
-          e.progress.durationMs.forEach((k, v) => streamMs.merge(k, v, _ + _))
-        }
+        if (runIds.contains(e.progress.runId)) progress.add(e.progress)
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         if (runIds.remove(e.runId)) streamsOpen.arriveAndDeregister()
     }
     sc.addSparkListener(jobListener); spark.streams.addListener(streamListener)
     try {
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       sc.setLocalProperty(ScopeKey, scope)
       val out = try body finally sc.setLocalProperty(ScopeKey, null)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
       sc.setLocalProperty(ScopeKey, scope + "-marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(ScopeKey, null)
       require(markerSeen.await(30, TimeUnit.SECONDS), "listener bus did not drain in 30 s")
       streamsOpen.awaitAdvanceInterruptibly(streamsOpen.arrive(), 30, TimeUnit.SECONDS)
       // a job's skipped stages (shuffle output reused) run no tasks
       (out, Counts(jobs.get, stages.values.asScala.toSeq.filter(_.tasks > 0).sortBy(_.id),
-        streamMs.asScala.toMap, triggers.get))
+        progress.asScala.toSeq, compiles))
     } finally { sc.removeSparkListener(jobListener); spark.streams.removeListener(streamListener) }
   }
 
@@ -123,10 +132,18 @@ object Inspect {
         }
       }
       println(f"COUNTS $n reps=3 jobs=${c.jobs} stages=${c.stages.size} tasks=${c.tasks} " +
-        f"task_run_s=${c.taskRunS}%.3f task_cpu_s=${c.taskCpuS}%.3f")
+        f"task_run_s=${c.taskRunS}%.3f task_cpu_s=${c.taskCpuS}%.3f compiles=${c.compiles}")
       c.stages.sortBy(-_.cpuNs).take(5).foreach { s =>
         println(f"  STAGE ${s.id}%5d tasks=${s.tasks}%4d cpu_s=${s.cpuNs / 1e9}%7.3f " +
           f"run_s=${s.runMs / 1e3}%7.3f  ${s.name.take(80)}")
+      }
+      c.progress.foreach { p =>
+        val state = p.stateOperators
+        println(s"TRIGGER $n batch=${p.batchId} input_rows=${p.numInputRows} " +
+          s"watermark=${Option(p.eventTime.get("watermark")).getOrElse("-")} " +
+          s"state_rows=${state.map(_.numRowsTotal).sum} state_updated=${state.map(_.numRowsUpdated).sum} " +
+          s"state_removed=${state.map(_.numRowsRemoved).sum} state_stores=${state.map(_.numShufflePartitions).sum} " +
+          p.durationMs.asScala.toSeq.sortBy(_._1).map { case (k, v) => s"${k}_ms=$v" }.mkString(" "))
       }
       if (c.triggers > 0) println(s"STREAM $n triggers=${c.triggers} " +
         c.streamMs.toSeq.sorted.map { case (k, v) => s"${k}_ms=$v" }.mkString(" "))

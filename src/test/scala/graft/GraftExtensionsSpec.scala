@@ -11,6 +11,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // without it) the config path can't be exercised; `withExtensions`
     // runs the identical GraftExtensions registration code. The config
     // path itself is what GraftSession sets and Verify/Bench run under.
+    TestSpark.spark // the shared context is TestSpark's, whatever the suite order
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()

@@ -47,13 +47,18 @@ class PlanShapeSpec extends SparkSpec {
 
   private case class Built(shape: PlanShape.Shape, boundedBroadcasts: Boolean, treePin: Option[Boolean])
 
+  /** The query's AQE initial plan, subqueries included, and its optimized logical plan. */
+  private def plans(n: String): (SparkPlan, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+    val qe = SparkEntry.queries(n)(spark, d).queryExecution
+    (qe.executedPlan match { case a: AdaptiveSparkPlanExec => a.initialPlan; case p => p }, qe.optimizedPlan)
+  }
+
   /** Every registered query, built once; Left is the construction error. */
   private lazy val built: SortedMap[String, Either[String, Built]] =
     SortedMap.from(SparkEntry.queries.keys.toSeq.sorted.map { n =>
       n -> Try {
-        val qe = SparkEntry.queries(n)(spark, d).queryExecution
-        val plan = qe.executedPlan match { case a: AdaptiveSparkPlanExec => a.initialPlan; case p => p }
-        Built(PlanShape.of(plan), PlanAudit.boundedBroadcasts(qe.optimizedPlan), treePins.get(n).map(_(plan)))
+        val (plan, optimized) = plans(n)
+        Built(PlanShape.of(plan), PlanAudit.boundedBroadcasts(optimized), treePins.get(n).map(_(plan)))
       }.toEither.left.map(_.toString)
     })
 
@@ -88,6 +93,22 @@ class PlanShapeSpec extends SparkSpec {
       }
       fail(s"plan shapes differ from $record (actual record written to $actualOut):\n" +
         diff.take(400).mkString("\n"))
+    }
+  }
+
+  test("the vector scan floor's partitioning is reused when shuffle partitions differ from the cores") {
+    // Tables.parallelScan's floor, sized by the core count (4 here), cost each of these
+    // one more hashpartitioning(vec_id) exchange and sort at 8 shuffle partitions
+    val qs = Seq("q170_semantic_dedup", "q198_semantic_decontam", "q228_hard_negatives")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    val actual = try qs.map(n => n -> PlanShape.of(plans(n)._1)).toMap finally spark.conf.set(key, prev)
+    val expected = read(record)
+    qs.foreach { n =>
+      val (a, e) = (actual(n).toSet, expected(n).toSet)
+      val diff = (a -- e).map(f => s"  + $f") ++ (e -- a).map(f => s"  - $f")
+      assert(diff.isEmpty, diff.mkString(s"$n at 8 shuffle partitions:\n", "\n", ""))
     }
   }
 

@@ -14,6 +14,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.warmPassConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -30,6 +30,19 @@ class VecExpressionsSpec extends SparkSpec {
     assert(rows(2).isNullAt(0)) // zero-norm row
   }
 
+  test("registerOnce registers each function once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    def infos() = VecExpressions.sqlBuilders.map { case (name, _, _) =>
+      reg.lookupFunction(FunctionIdentifier(name)) }
+    VecExpressions.registerOnce(spark)
+    val first = infos()
+    assert(first.forall(_.isDefined))
+    VecExpressions.registerOnce(spark)
+    // a re-registration would store a new ExpressionInfo (and log a WARN)
+    assert(infos().zip(first).forall { case (a, b) => a.get eq b.get })
+  }
+
   test("length-mismatched vectors yield NULL, not a truncated dot/cosine") {
     val mm = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
     val r = mm.select(
