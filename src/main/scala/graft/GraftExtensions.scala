@@ -8,7 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * function registry at session build time, so pure-SQL users can call
   * them: set `spark.sql.extensions=graft.GraftExtensions` (GraftSession
   * does). Column-API callers go through VecExpressions.cosineFast, which
-  * self-registers and works in any session.
+  * self-registers and works in any session. Functions only: every
+  * operator is built from composed expressions, so no optimizer rule or
+  * planner strategy is injected.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -20,7 +22,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(className, name), builder))
     }
-    // sig(ngram()) -> fused single-pass kernel; see FuseMinHashRule
-    ext.injectOptimizerRule(_ => graft.plans.FuseMinHashRule)
   }
 }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * buffering history instead of bounded state) has a number to trip.
   *
   * Protocol: the sf corpus (events for the four event gates, documents
-  * for the pack assembler), event-time sorted, split into 8
-  * micro-batches fed through MemoryStream into a noop sink;
+  * for the pack assembler and the near-dup stream), event-time sorted,
+  * split into 8 micro-batches fed through MemoryStream into a noop sink;
   * per-micro-batch wall-clock = addData + processAllAvailable. The
   * first batch carries stream-startup + codegen and is reported
   * separately; median and max are over the steady batches. Results
@@ -99,6 +99,8 @@ object StreamGateBench {
       ms => EventStreams.abGate(ms.toDF()))
     measure[DocFeed]("pack", docs,
       ms => DocStreams.packAssembler(ms.toDF()))
+    measure[DocFeed]("neardup", docs,
+      ms => DocStreams.nearDupCandidates(ms.toDF()))
     spark.stop()
   }
 }

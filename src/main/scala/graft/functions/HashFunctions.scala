@@ -3,13 +3,15 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** MinHash / SimHash building blocks over token or shingle arrays.
+/** Column and SQL entry points for the engine's native text expressions.
   *
-  * Signatures run as native Catalyst expressions ([[MinHashSig]],
-  * [[SimHash64]]) — tight JIT'd loops in the scan stage, zero shuffles;
-  * the only shuffle in an LSH dedup is the band-bucket join. The pairwise
-  * helpers (jaccard estimates, banding) stay as higher-order functions:
-  * they run on candidate pairs / k-length signatures, not the corpus.
+  * MinHash and SimHash signatures come from the engine-portable kernels
+  * ([[PortableMinHashSig]], [[PortableSimHash]]): one fused, JIT'd pass
+  * per document in the scan stage, zero shuffles, and exact modular
+  * arithmetic the DuckDB oracles replay bit for bit. Batch dedup (q51,
+  * q52, q56) and both document streams (`DocStreams.nearDupCandidates`,
+  * `DocStreams.incrementalAdmission`) band the same signature, so the
+  * only shuffle in an LSH dedup is the band-bucket join or group.
   */
 object HashFunctions {
 
@@ -37,13 +39,6 @@ object HashFunctions {
     * is a class, not a package — DESCRIBE FUNCTION shows it.
     */
   val sqlBuilders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("minhash_sig", classOf[MinHashSig].getName,
-      exprs => MinHashSig(exprs.head, intArg("minhash_sig", exprs, 1))),
-    ("simhash64", classOf[SimHash64].getName,
-      exprs => SimHash64(exprs.head)),
-    ("minhash_text", classOf[MinHashText].getName,
-      exprs => MinHashText(exprs.head,
-        intArg("minhash_text", exprs, 1), intArg("minhash_text", exprs, 2))),
     ("word_ngrams", classOf[WordNgrams].getName,
       exprs => WordNgrams(exprs.head, intArg("word_ngrams", exprs, 1))),
     ("text_stats", classOf[TextStats].getName,
@@ -103,24 +98,6 @@ object HashFunctions {
   def unigramSegment(word: Column, pieces: Column, weights: Column): Column =
     native("unigram_segment", word, pieces, weights)
 
-  /** k-permutation MinHash signature (array<long>, length k): native
-    * kernel, two XXH64 passes per shingle + k derived minima
-    * (Kirsch–Mitzenmacher). Empty input → all-Long.MaxValue sentinel.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    native("minhash_sig", shingles, lit(k))
-
-  /** Fused tokenize + word-n-gram + MinHash straight off the text column —
-    * one byte-level pass, no token/shingle materialization. The fast path
-    * for whole-corpus signature scans. EXACTLY equal to
-    * `minhashSignature(wordNgrams(text, n), k)` — both hash identical
-    * space-joined gram bytes; [[graft.plans.FuseMinHashRule]] relies on
-    * that equality and a differential test asserts it. Do not change one
-    * kernel's byte encoding without the other.
-    */
-  def minhashTextSignature(text: Column, n: Int, k: Int): Column =
-    native("minhash_text", text, lit(n), lit(k))
-
   /** Native word-n-gram expression (Column form of [[WordNgrams]]). */
   def wordNgramsNative(text: Column, n: Int): Column =
     native("word_ngrams", text, lit(n))
@@ -166,50 +143,14 @@ object HashFunctions {
   def portableSimhashNative(text: Column, n: Int, bits: Int): Column =
     native("portable_simhash", text, lit(n), lit(bits))
 
-  /** Band keys for LSH: split the k-signature into `bands` bands of
-    * k/bands rows each; key = (band index, xxhash64 of the band slice).
-    * Returns array<struct<band:int, bh:bigint>> — explode then group/join
-    * on (band, bh) to get candidate pairs.
-    */
-  def lshBands(signature: Column, k: Int, bands: Int): Column = {
-    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val r = k / bands
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.cast("int").as("band"),
-        xxhash64(b, slice(signature, b * r + 1, lit(r))).as("bh")))
-  }
-
-  /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
-    * components.
-    */
-  def minhashJaccard(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / size(sigA)
-
-  /** Exact Jaccard over two string arrays (as sets). */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = size(array_union(a, b)).cast("double")
-    when(union === 0, lit(0.0)).otherwise(inter / union)
-  }
-
   /** Exact Jaccard for arrays ALREADY distinct (e.g. array_distinct'd
     * shingle sets): |a ∪ b| = |a| + |b| − |a ∩ b|, so only the
-    * intersection is materialized — half the set work of [[jaccard]] on
-    * the hot pairwise-verify path.
+    * intersection is materialized — half the set work of an
+    * `array_union` on the hot pairwise-verify path.
     */
   def jaccardDistinct(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = size(a).cast("double") + size(b).cast("double") - inter
     when(union === 0, lit(0.0)).otherwise(inter / union)
   }
-
-  /** 64-bit SimHash over a token array: per bit, sum +1/-1 votes from each
-    * token's xxhash64 (seed 42); bit set iff vote > 0. Native kernel.
-    */
-  def simhash64(toks: Column): Column = native("simhash64", toks)
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 }

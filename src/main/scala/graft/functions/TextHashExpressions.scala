@@ -1,87 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Shared imperative kernels for the text-hash expressions. Called from
-  * both interpreted eval and the generated code (one static call per row
-  * keeps whole-stage codegen intact while the per-shingle loop runs as
-  * plain JIT-compiled Java).
-  *
-  * MinHash uses the two-hash trick (Kirsch–Mitzenmacher) plus a
-  * splitmix64 finalizer: per shingle, two XXH64 passes over the bytes,
-  * then the i-th "permutation" is mix64(h1 + i*h2) — O(bytes + k) per
-  * shingle instead of O(bytes·k). The finalizer is load-bearing: without
-  * it, min(h1 + i*h2) for large i is always won by the shingle with the
-  * smallest h2 (the slope dominates), so slots correlate and estimated
-  * Jaccard inflates wildly. The avalanche makes each slot's winner
-  * pseudo-independent. This is what makes a 64-permutation signature
-  * affordable on 100-TB corpora: ~2 byte-hashes + 64 integer mixes per
-  * shingle, fully scan-local.
+/** Shared imperative kernels for the text expressions. Called from both
+  * interpreted eval and the generated code (one static call per row
+  * keeps whole-stage codegen intact while the per-token loop runs as
+  * plain JIT-compiled Java). The MinHash/SimHash signatures live in
+  * [[PortableHashKernels]]; this object holds the tokenizing kernels.
   */
 object TextHashKernels {
-
-  /** splitmix64 finalizer — full avalanche in 6 integer ops. */
-  @inline private def mix64(v: Long): Long = {
-    var z = v
-    z ^= z >>> 30; z *= 0xBF58476D1CE4E5B9L
-    z ^= z >>> 27; z *= 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  def minhashSig(arr: ArrayData, k: Int): ArrayData = {
-    val sig = new Array[Long](k)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      if (s != null) {
-        val h1 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        val h2 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, h1)
-        var h = h1
-        var j = 0
-        while (j < k) {
-          val v = mix64(h)
-          if (v < sig(j)) sig(j) = v
-          h += h2
-          j += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  /** Same vote semantics as the HOF formulation (xxhash64 seed 42 per
-    * token; bit set iff strictly more 1-votes than 0-votes). */
-  def simhash64(arr: ArrayData): Long = {
-    val votes = new Array[Int](64)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      if (s != null) {
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
 
   @inline private def isWs(b: Byte): Boolean =
     b == ' ' || (b >= 0x09 && b <= 0x0D)
@@ -108,18 +39,16 @@ object TextHashKernels {
     (spans, nTok)
   }
 
-  /** Copy the space-joined n-gram window [t, t+n) into `scratch` (grown as
-    * needed); returns (buffer, byteLength). Identical bytes to
-    * concat_ws(" ", tokens) — the canonical gram encoding both the string
-    * and hashed paths share.
+  /** The space-joined n-gram window [t, t+n) as an exact-size byte
+    * array — identical bytes to concat_ws(" ", tokens), the canonical
+    * gram encoding.
     */
-  private def gramBytes(base: AnyRef, off: Long, spans: Array[Int], t: Int, n: Int,
-      scratch: Array[Byte]): (Array[Byte], Int) = {
+  private def gramBytes(base: AnyRef, off: Long, spans: Array[Int], t: Int, n: Int)
+      : Array[Byte] = {
     var need = n - 1
     var j = t
     while (j < t + n) { need += spans(j * 2 + 1) - spans(j * 2); j += 1 }
-    val buf = if (scratch.length >= need) scratch
-      else new Array[Byte](math.max(need, scratch.length * 2))
+    val buf = new Array[Byte](need)
     var pos = 0
     j = t
     while (j < t + n) {
@@ -130,45 +59,7 @@ object TextHashKernels {
       pos += e - s
       j += 1
     }
-    (buf, pos)
-  }
-
-  /** Fused tokenize + word-n-gram + MinHash over raw text: one pass to
-    * find token spans, then per window the space-joined gram bytes are
-    * assembled in a REUSED scratch buffer, hashed (two XXH64 passes), and
-    * folded into the k slots via KM+mix64. Hashes exactly the bytes
-    * `wordNgrams` would materialize, so
-    * minhash_text(t, n, k) ≡ minhash_sig(word_ngrams(t, n), k)
-    * — the equivalence the [[graft.FuseMinHashRule]] fusion rule relies
-    * on (and a differential test asserts). Documents with fewer than n
-    * tokens get the all-Long.MaxValue sentinel.
-    */
-  def minhashText(s: org.apache.spark.unsafe.types.UTF8String, n: Int, k: Int): ArrayData = {
-    val sig = new Array[Long](k)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val (spans, nTok) = tokenSpans(base, off, s.numBytes)
-    var scratch = new Array[Byte](256)
-    var t = 0
-    while (t + n <= nTok) {
-      val (buf, blen) = gramBytes(base, off, spans, t, n, scratch)
-      scratch = buf
-      val h1 = XXH64.hashUnsafeBytes(buf,
-        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, blen, 42L)
-      val h2 = XXH64.hashUnsafeBytes(buf,
-        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, blen, h1)
-      var h = h1
-      var q = 0
-      while (q < k) {
-        val v = mix64(h)
-        if (v < sig(q)) sig(q) = v
-        h += h2
-        q += 1
-      }
-      t += 1
-    }
-    new GenericArrayData(sig)
+    buf
   }
 
   /** Fused per-document text statistics — ONE byte pass replacing the
@@ -233,66 +124,14 @@ object TextHashKernels {
     val out = new Array[Any](nTok - n + 1)
     var t = 0
     while (t + n <= nTok) {
-      // empty scratch -> gramBytes allocates exactly the gram's size, so
-      // the buffer can be handed to UTF8String without copying; sharing
-      // gramBytes keeps the gram encoding identical to the hashed path
-      val (buf, blen) = gramBytes(base, off, spans, t, n, Array.emptyByteArray)
-      out(t) = org.apache.spark.unsafe.types.UTF8String.fromBytes(buf, 0, blen)
+      // gramBytes allocates exactly the gram's size, so the buffer can be
+      // handed to UTF8String without copying
+      out(t) = org.apache.spark.unsafe.types.UTF8String.fromBytes(
+        gramBytes(base, off, spans, t, n))
       t += 1
     }
     new GenericArrayData(out)
   }
-}
-
-abstract class TextHashExpression extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.simpleString}")
-  }
-}
-
-/** k-permutation MinHash signature, native kernel (see [[TextHashKernels]]).
-  * Empty input → all-Long.MaxValue sentinel, matching the HOF version. */
-case class MinHashSig(child: Expression, k: Int) extends TextHashExpression {
-  require(k > 0 && k <= 4096, s"unreasonable k=$k")
-  override def prettyName: String = "minhash_sig"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernels.minhashSig(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.TextHashKernels.minhashSig($v, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** Fused text → word-n-gram MinHash signature (see
-  * [[TextHashKernels.minhashText]]). */
-case class MinHashText(child: Expression, n: Int, k: Int) extends UnaryExpression {
-  require(n > 0 && n <= 64 && k > 0 && k <= 4096)
-  override def prettyName: String = "minhash_text"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernels.minhashText(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.TextHashKernels.minhashText($v, $n, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashText =
-    copy(child = newChild)
 }
 
 /** Native word-n-gram expression (see [[TextHashKernels.wordNgrams]]). */
@@ -351,20 +190,4 @@ object TextStats {
     StructField("alpha", IntegerType, nullable = false),
     StructField("n_tokens", IntegerType, nullable = false),
     StructField("n_bpeish", IntegerType, nullable = false)))
-}
-
-/** 64-bit SimHash, native kernel — bit-identical to the HOF formulation. */
-case class SimHash64(child: Expression) extends TextHashExpression {
-  override def prettyName: String = "simhash64"
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernels.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.TextHashKernels.simhash64($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }

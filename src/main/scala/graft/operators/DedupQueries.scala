@@ -39,9 +39,6 @@ object DedupQueries {
           when(col("doc_id") === col("keeper_id"), "keep").otherwise("drop").as("action"))
     })
 
-  val MinhashK = 64
-  val MinhashBands = 16
-
   // Portable-hash family constants — declared BEFORE the query vals that
   // bake them into oracle SQL strings at object-init time (a later-val
   // reference would silently read 0 during initialization).

@@ -3,25 +3,30 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.functions.HashFunctions._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.operators.DedupQueries
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming MinHash-LSH near-duplicate detection over a document feed —
-  * the streaming form of the batch LSH dedup (q52/q56; ref for the batch
-  * semantics: DedupQueries). This is the ingest-time shape a training-data
-  * pipeline needs: flag each arriving document against what already
-  * streamed in, without ever holding the corpus.
+  * the streaming form of the batch LSH dedup (q51/q52/q56; ref for the
+  * batch semantics: DedupQueries). This is the ingest-time shape a
+  * training-data pipeline needs: flag each arriving document against what
+  * already streamed in, without ever holding the corpus.
   *
   * Design:
-  *   signature + band keys are computed scan-side by the same native
-  *   expressions as the batch path (minhash_text / lsh bands — identical
-  *   hash family, so streamed and batch signatures are comparable), then
-  *   ONE stateful operator keyed by (band, bh) holds each bucket's
-  *   admit-first owner: the earliest (ts, doc_id) document to claim the
-  *   bucket within the horizon. A later document hitting an owned bucket
-  *   emits a (doc, dup_of=owner, est_jaccard) candidate instead of
-  *   claiming.
+  *   signature + band keys are computed scan-side by the batch path's own
+  *   kernel and bands: the portable k=12 MinHash over word 3-grams and
+  *   DedupQueries' 4-band digests, sentinel slots nulled first — so a
+  *   claim's (band, bh) and sig are exactly q51's (b0..b3, mh0..mh11)
+  *   for that document (MinHashOracleEquivalenceSpec pins this over the
+  *   sf0.001 corpus), and stream and batch propose from one index.
+  *   Gram-less documents (fewer than 3 tokens) have no digest and claim
+  *   no bucket, as in the batch banding. Then ONE stateful operator keyed
+  *   by (band, bh) holds each bucket's admit-first owner: the earliest
+  *   (ts, doc_id) document to claim the bucket within the horizon. A
+  *   later document hitting an owned bucket emits a (doc, dup_of=owner,
+  *   est_jaccard) candidate instead of claiming.
   *
   * Semantics notes:
   *   - Admit-first (FIFO): duplicates never become owners of buckets they
@@ -33,13 +38,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     filter — the rows agree on est_jaccard since it comes from the
   *     full signatures, not the band).
   *   - Unverified candidates: like the batch path, LSH proposes and
-  *     est_jaccard (signature agreement) disposes; callers filter on
-  *     their threshold.
+  *     est_jaccard (signature agreement, q52's n_match / k) disposes;
+  *     callers filter on their threshold.
   *
   * Scale shape: the only shuffle is the groupByKey on the 12-byte bucket
-  * key; state is one owner per occupied bucket (doc_id + k-slot
-  * signature, ~0.5 KB at k=64) and is evicted by event-time timeout once
-  * the watermark passes owner.ts + horizon — so state is
+  * key, 4 claims per document; state is one owner per occupied bucket
+  * (doc_id + 12-slot signature, ~0.1 KB) and is evicted by event-time
+  * timeout once the watermark passes owner.ts + horizon — so state is
   * O(buckets occupied within the horizon), not O(stream history), and a
   * re-arriving text after the horizon simply re-claims its buckets.
   */
@@ -50,11 +55,41 @@ object DocStreams {
   final case class BucketOwner(doc_id: Long, ts: Timestamp, sig: Seq[Long])
   final case class NearDup(doc_id: Long, dup_of: Long, est_jaccard: Double, ts: Timestamp)
 
+  /** The batch path's MinHash signature (q51's mh0..mh11, sentinel P in
+    * every slot of a gram-less doc). */
+  private def portableSig(text: Column): Column =
+    portableMinhashSigNative(text, 3, DedupQueries.PortK)
+
+  /** The batch path's band digests (q51's b0..b3) of a [[portableSig]]
+    * column, sentinel slots nulled exactly as the batch banding does: a
+    * gram-less doc gets all-NULL digests and so no candidates. */
+  private def bandDigests(sig: Column): Seq[Column] = {
+    val P = graft.functions.PortableHashKernels.P
+    DedupQueries.portableBandDigests { i =>
+      val v = element_at(sig, i + 1)
+      when(v === P, lit(null).cast("long")).otherwise(v)
+    }
+  }
+
   /** Fraction of agreeing signature slots — the MinHash Jaccard estimate
-    * (same definition as the SQL-side minhashJaccard helper). */
+    * (q52's n_match / k). */
   private def estJaccard(a: Seq[Long], b: Seq[Long]): Double =
     if (a.isEmpty || a.length != b.length) 0.0
     else a.iterator.zip(b.iterator).count { case (x, y) => x == y }.toDouble / a.length
+
+  /** One (band, bh) bucket claim per band of each document, carrying its
+    * signature. Claims with a NULL digest are dropped: left in, every
+    * gram-less doc would group under one null key (and a null cannot
+    * decode into Claim's primitive bh). */
+  private[graft] def claims(docs: DataFrame): Dataset[Claim] = {
+    import docs.sparkSession.implicits._
+    docs
+      .select(col("doc_id"), col("ts"), portableSig(col("text")).as("sig"))
+      .select(col("doc_id"), col("ts"), col("sig"),
+        posexplode(array(bandDigests(col("sig")): _*)).as(Seq("band", "bh")))
+      .filter(col("bh").isNotNull)
+      .as[Claim]
+  }
 
   /** docs: (doc_id LONG, ts TIMESTAMP, text STRING), batch or streaming.
     * In streaming, `withWatermark` is applied here (callers pass the
@@ -64,23 +99,10 @@ object DocStreams {
     */
   def nearDupCandidates(
       docs: DataFrame,
-      ngram: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
       watermark: String = "1 hour",
       horizonSeconds: Long = 3600L): Dataset[NearDup] = {
     import docs.sparkSession.implicits._
-    val claims = docs
-      .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        minhashTextSignature(col("text"), ngram, k).as("sig"))
-      .select(col("doc_id"), col("ts"), col("sig"),
-        explode(lshBands(col("sig"), k, bands)).as("bk"))
-      .select(col("doc_id"), col("ts"), col("bk.band").as("band"),
-        col("bk.bh").as("bh"), col("sig"))
-      .as[Claim]
-
-    claims.groupByKey(c => (c.band, c.bh))
+    claims(docs.withWatermark("ts", watermark)).groupByKey(c => (c.band, c.bh))
       .flatMapGroupsWithState[BucketOwner, NearDup](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (_: (Int, Long), rows: Iterator[Claim], state: GroupState[BucketOwner]) =>
@@ -338,22 +360,13 @@ object DocStreams {
       matchMin: Int = graft.operators.DedupQueries.PortMatchMin,
       watermark: String = "1 hour"): Dataset[Admission] = {
     import docs.sparkSession.implicits._
-    import graft.operators.DedupQueries
-    val P = graft.functions.PortableHashKernels.P
-    val sig = graft.functions.HashFunctions
-      .portableMinhashSigNative(col("text"), 3, DedupQueries.PortK)
-    // digests from the raw signature, sentinel slots nulled exactly as
-    // the batch banding does (gram-less docs get all-null digests and
-    // therefore no candidates — but still flow, via the left outer)
-    val digests = DedupQueries.portableBandDigests { i =>
-      val v = element_at(col("mh_new"), i + 1)
-      when(v === P, lit(null).cast("long")).otherwise(v)
-    }
+    // gram-less docs get all-null digests and therefore no candidates —
+    // but still flow, via the left outer
     val banded = docs
       .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"), sig.as("mh_new"))
+      .select(col("doc_id"), col("ts"), portableSig(col("text")).as("mh_new"))
       .select(col("doc_id"), col("ts"), col("mh_new"),
-        posexplode(array(digests: _*)).as(Seq("band", "digest")))
+        posexplode(array(bandDigests(col("mh_new")): _*)).as(Seq("band", "digest")))
     val cands = banded
       .join(bandIndex, Seq("band", "digest"), "left_outer")
       .join(idxSigs, Seq("idx_id"), "left_outer")

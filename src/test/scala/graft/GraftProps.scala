@@ -83,12 +83,13 @@ object GraftProps extends Properties("graft") {
   property("minhash jaccard estimate is 1 on identical docs, in [0,1] always") =
     forAll(Gen.listOfN(2, Gen.listOfN(8, word).map(_.mkString(" ")))) { docs =>
       import graft.functions.HashFunctions._
-      import graft.functions.TextFunctions._
       val df = Seq((docs.head, docs.head, docs(1))).toDF("a", "same", "b")
-      def sig(c: String) = minhashSignature(wordNgrams(col(c), 2), 16)
-      val r = df.select(
-        minhashJaccard(sig("a"), sig("same")).as("id"),
-        minhashJaccard(sig("a"), sig("b")).as("ab")).collect().head
+      def sig(c: String) = portableMinhashSigNative(col(c), 2, 16)
+      // q52's estimate: agreeing slots / k
+      def est(x: String, y: String) =
+        operators.DedupQueries.nMatch(sig(x), sig(y)).cast("double") / 16
+      val r = df.select(est("a", "same").as("id"), est("a", "b").as("ab"))
+        .collect().head
       r.getDouble(0) == 1.0 && r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0
     }
 
@@ -99,8 +100,8 @@ object GraftProps extends Properties("graft") {
       val messy = words.mkString("\t") + " "
       val df = Seq((t, messy)).toDF("a", "b")
       val r = df.select(
-        minhashTextSignature(col("a"), 2, 16).as("sa"),
-        minhashTextSignature(col("b"), 2, 16).as("sb")).collect().head
+        portableMinhashSigNative(col("a"), 2, 16).as("sa"),
+        portableMinhashSigNative(col("b"), 2, 16).as("sb")).collect().head
       r.getSeq[Long](0) == r.getSeq[Long](1)
     }
 

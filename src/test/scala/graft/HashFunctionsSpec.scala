@@ -7,71 +7,55 @@ import org.apache.spark.sql.functions._
 class HashFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val k = 16
+  // the portable kernel every MinHash caller shares: word 3-grams, k slots
+  private val k = graft.operators.DedupQueries.PortK
+  private val P = graft.functions.PortableHashKernels.P
   private def sig(text: String): List[Long] =
     Seq(text).toDF("text")
-      .select(minhashSignature(wordNgrams(col("text"), 2), k).as("v"))
+      .select(portableMinhashSigNative(col("text"), 3, k).as("v"))
       .collect().head.getSeq[Long](0).toList
+  /** Estimated Jaccard: fraction of agreeing slots (q52's n_match / k). */
+  private def est(a: String, b: String): Double = {
+    val (sa, sb) = (sig(a), sig(b))
+    sa.zip(sb).count { case (x, y) => x == y }.toDouble / k
+  }
 
   test("minhash: identical docs get identical signatures of length k") {
     val a = sig("to be or not to be that is the question")
     val b = sig("to be or not to be that is the question")
     assert(a == b && a.length == k)
+    assert(a.forall(v => v >= 0L && v < P))
   }
 
   test("minhash: empty doc gets the all-sentinel signature") {
-    assert(sig("") == List.fill(k)(Long.MaxValue))
-  }
-
-  test("minhash: permuting shingle order does not change the signature (set semantics)") {
-    // same 2-gram multiset reversed at line level -> same mins per seed
-    val a = sig("a b c d")
-    val grams = Seq(Seq("a b", "b c", "c d").reverse).toDF("g")
-      .select(minhashSignature(col("g"), k).as("v")).collect().head.getSeq[Long](0).toList
-    assert(a == grams)
+    assert(sig("") == List.fill(k)(P))
   }
 
   test("minhashJaccard: 1 for identical, 0 for disjoint, bounded between") {
-    val df = Seq(("a b c d e f g h", "a b c d e f g h", "q r s t u v w x")).toDF("t1", "t2", "t3")
-    val row = df.select(
-      minhashJaccard(minhashSignature(wordNgrams(col("t1"), 2), k),
-        minhashSignature(wordNgrams(col("t2"), 2), k)).as("same"),
-      minhashJaccard(minhashSignature(wordNgrams(col("t1"), 2), k),
-        minhashSignature(wordNgrams(col("t3"), 2), k)).as("disj")).collect().head
-    assert(row.getAs[Double]("same") == 1.0)
-    assert(row.getAs[Double]("disj") == 0.0)
+    assert(est("a b c d e f g h", "a b c d e f g h") == 1.0)
+    assert(est("a b c d e f g h", "q r s t u v w x") == 0.0)
+    val mid = est("a b c d e f g h", "a b c d e f q r")
+    assert(mid > 0.0 && mid < 1.0)
   }
 
   test("exact jaccard: set semantics with empty-union guard") {
     val df = Seq((Seq("a", "b"), Seq("b", "c"), Seq.empty[String])).toDF("a", "b", "e")
     val row = df.select(
-      jaccard(col("a"), col("b")).as("ab"),
-      jaccard(col("e"), col("e")).as("ee")).collect().head
+      jaccardDistinct(col("a"), col("b")).as("ab"),
+      jaccardDistinct(col("e"), col("e")).as("ee")).collect().head
     assert(math.abs(row.getAs[Double]("ab") - 1.0 / 3) < 1e-9)
     assert(row.getAs[Double]("ee") == 0.0)
   }
 
-  test("lshBands: bands partition the signature; equal sigs share all band keys") {
-    val df = Seq("x y z w v u t s").toDF("text")
-      .select(minhashSignature(wordNgrams(col("text"), 2), k).as("sig"))
-      .select(lshBands(col("sig"), k, 4).as("b"))
-    val bands = df.collect().head.getSeq[org.apache.spark.sql.Row](0).toList
-    assert(bands.length == 4)
-    assert(bands.map(_.getAs[Int]("band")) == List(0, 1, 2, 3))
-  }
-
   test("minhashText: fused path is whitespace-normalizing, deterministic, sentinel under n tokens") {
-    def tsig(t: String): List[Long] =
-      Seq(t).toDF("text").select(minhashTextSignature(col("text"), 3, k).as("v"))
-        .collect().head.getSeq[Long](0).toList
-    val a = tsig("to be or not to be")
-    assert(a == tsig("to be or not to be") && a.length == k)
+    val a = sig("to be or not to be")
+    assert(a == sig("to be or not to be") && a.length == k)
     // runs of spaces/tabs/newlines produce the same token stream
-    assert(a == tsig("to\tbe  or\nnot to   be"))
-    assert(a != tsig("to be or not to him"))
+    assert(a == sig("to\tbe  or\nnot to   be"))
+    assert(a != sig("to be or not to him"))
     // fewer than n tokens -> sentinel
-    assert(tsig("only two") == List.fill(k)(Long.MaxValue))
-    assert(tsig("") == List.fill(k)(Long.MaxValue))
+    assert(sig("only two") == List.fill(k)(P))
+    assert(sig("") == List.fill(k)(P))
   }
 
   test("native wordNgrams is byte-identical to the HOF formulation") {
@@ -83,16 +67,6 @@ class HashFunctionsSpec extends SparkSpec {
       graft.functions.TextFunctions.wordNgramsHof(col("text"), 3).as("hof"))
       .collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
-  }
-
-  test("minhash_text equals minhash_sig(word_ngrams) — the fusion-rule precondition") {
-    val texts = Seq("to be or not to be that is the question",
-      "a  b\tc   d e", "", "x y", "single")
-    val rows = texts.toDF("text").select(
-      minhashTextSignature(col("text"), 3, k).as("fused"),
-      minhashSignature(wordNgrams(col("text"), 3), k).as("composed"))
-      .collect()
-    rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
   test("ngram_explode generator matches posexplode(word_ngrams)") {
@@ -111,28 +85,9 @@ class HashFunctionsSpec extends SparkSpec {
   }
 
   test("minhashText: estimated jaccard tracks overlap direction") {
-    val df = Seq(("w1 w2 w3 w4 w5 w6 w7 w8 w9 w10",
-      "w1 w2 w3 w4 w5 w6 w7 w8 w9 zz",
-      "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10")).toDF("t1", "t2", "t3")
-    val row = df.select(
-      minhashJaccard(minhashTextSignature(col("t1"), 3, 64),
-        minhashTextSignature(col("t2"), 3, 64)).as("near"),
-      minhashJaccard(minhashTextSignature(col("t1"), 3, 64),
-        minhashTextSignature(col("t3"), 3, 64)).as("far")).collect().head
-    assert(row.getAs[Double]("near") > 0.5)
-    assert(row.getAs[Double]("far") == 0.0)
-  }
-
-  test("simhash: identical token sets agree; hamming is 0 there and small for near-dups") {
-    val df = Seq(("the quick brown fox jumps over the lazy dog",
-      "the quick brown fox jumps over the lazy dog",
-      "completely different words entirely unrelated content here now")).toDF("a", "b", "c")
-    val row = df.select(
-      hamming64(simhash64(tokens(col("a"))), simhash64(tokens(col("b")))).as("same"),
-      hamming64(simhash64(tokens(col("a"))), simhash64(tokens(col("c")))).as("diff"))
-      .collect().head
-    assert(row.getAs[Number]("same").longValue == 0L)
-    assert(row.getAs[Number]("diff").longValue > 3L)
+    val t1 = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
+    assert(est(t1, "w1 w2 w3 w4 w5 w6 w7 w8 w9 zz") > 0.5)
+    assert(est(t1, "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10") == 0.0)
   }
 
   // texts chosen to hit every kernel edge: multi-whitespace runs, tabs,

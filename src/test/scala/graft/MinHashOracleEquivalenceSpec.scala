@@ -1,46 +1,23 @@
 package graft
 
-import graft.functions.HashFunctions.{lshBands, minhashTextSignature}
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import graft.streaming.DocStreams
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.Platform
 
-/** Independent-replay coverage for the MinHash kernels: replay the
-  * ENTIRE computation — tokenization, gram construction, the hash
-  * family, banding, group union, estimated Jaccard — in independent
-  * driver-side Scala over the full sf0.001 corpus, and require EXACT
-  * equality. Only the primitive string hashes are shared with the
-  * engine; every line of composition logic is written twice.
+/** Independent-replay coverage for the portable MinHash family that
+  * every batch and streaming MinHash caller shares. Two roles:
   *
-  * Since round 12 the q51/q55 DRIVER queries ride the portable family
-  * and are DuckDB-hash-matched, so this spec's roles are (a) the
-  * xxhash64 signature/banding kernels that still power the STREAMING
-  * admission path (`DocStreams`), replayed end to end, and (b) a
-  * second, JVM-hosted replay of q55's portable group fold — defense
-  * in depth over the oracle, catching a kernel edit even when both
-  * SQL strings drift together.
+  *  (a) stream ≡ batch: the bucket claims behind
+  *      `DocStreams.nearDupCandidates` carry exactly q51's band digests
+  *      and signature (q51 is DuckDB-hash-matched), and the batch run of
+  *      the stream operator equals an admit-first replay over q51's
+  *      bands — so streamed and batch dedup propose from one index;
+  *  (b) a second, JVM-hosted replay of q55's portable group fold —
+  *      defense in depth over the oracle, catching a kernel edit even
+  *      when both SQL strings drift together.
   */
 class MinHashOracleEquivalenceSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
-  private val K = 64
-  private val Bands = 16
-
-  // splitmix64 finalizer, re-typed from the published algorithm (Steele
-  // et al., "Fast splittable pseudorandom number generators") — NOT
-  // imported from TextHashKernels; an accidental kernel edit must fail
-  // here.
-  private def mix64(v: Long): Long = {
-    var z = v
-    z ^= z >>> 30; z *= 0xBF58476D1CE4E5B9L
-    z ^= z >>> 27; z *= 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  private def xx(s: String, seed: Long): Long = {
-    val b = s.getBytes("UTF-8")
-    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, seed)
-  }
 
   private def grams3(text: String): Seq[String] = {
     val toks = text.split("\\s+").filter(_.nonEmpty)
@@ -48,55 +25,48 @@ class MinHashOracleEquivalenceSpec extends SparkSpec {
     else toks.sliding(3).map(_.mkString(" ")).toSeq
   }
 
-  /** q51's signature, independently: per gram two XXH64 passes (seed 42,
-    * then h1-seeded), slot j = min over grams of mix64(h1 + j*h2). */
-  private def xxSig(text: String): Seq[Long] = {
-    val sig = Array.fill(K)(Long.MaxValue)
-    for (g <- grams3(text)) {
-      val h1 = xx(g, 42L)
-      val h2 = xx(g, h1)
-      var h = h1
-      var j = 0
-      while (j < K) {
-        val v = mix64(h)
-        if (v < sig(j)) sig(j) = v
-        h += h2
-        j += 1
-      }
-    }
-    sig.toSeq
-  }
+  test("nearDupCandidates claims carry q51's band digests and signature on every sf0.001 doc") {
+    val K = graft.operators.DedupQueries.PortK
+    val Bands = graft.operators.DedupQueries.PortBands
+    // q51: doc_id, mh0..mh11, b0..b3; gram-less docs are all-NULL and
+    // band nowhere, so they drop out on both sides
+    val q51 = SparkEntry.queries("q51_minhash_signatures")(spark, d)
+      .collect().filterNot(_.isNullAt(1))
+      .map(r => (r.getLong(0), (1 to K).map(r.getLong),
+        (0 until Bands).map(j => r.getLong(1 + K + j))))
+    assert(q51.length >= 500)
+    val expected = q51.flatMap { case (id, sig, bs) =>
+      bs.zipWithIndex.map { case (bh, band) => (id, band, bh, sig) }
+    }.toSet
+    // ts rises with doc_id, so admit-first owners are the smallest ids
+    val docs = Tables.documents(spark, d)
+      .select(col("doc_id"), timestamp_seconds(col("doc_id")).as("ts"), col("text"))
+    val claims = DocStreams.claims(docs).collect()
+      .map(c => (c.doc_id, c.band, c.bh, c.sig.toIndexedSeq))
+    val (missing, extra) = (expected -- claims, claims.toSet -- expected)
+    // booleans bound first: assert's macro would print whole collections
+    val claimsMatch = claims.length == expected.size && missing.isEmpty && extra.isEmpty
+    assert(claimsMatch,
+      s"${claims.length} claims vs ${expected.size} from q51: ${missing.size} " +
+        s"missing (e.g. ${missing.headOption}), ${extra.size} extra (e.g. ${extra.headOption})")
 
-  /** lshBands' key, independently: Spark's XxHash64 expression over
-    * (int band, array<long> slice) folds seed 42 through hashInt then
-    * element-wise hashLong. */
-  private def bandKeys(sig: Seq[Long]): Seq[(Int, Long)] = {
-    val r = K / Bands
-    (0 until Bands).map { b =>
-      var h = XXH64.hashInt(b, 42L)
-      sig.slice(b * r, b * r + r).foreach(e => h = XXH64.hashLong(e, h))
-      (b, h)
-    }
-  }
-
-  test("streaming xxhash kernels (q51's former family): fused signature + band keys equal the independent replay on every sf0.001 doc") {
-    val engine = Tables.documents(spark, d)
-      .select(col("doc_id"), col("text"),
-        minhashTextSignature(col("text"), 3, K).as("sig"))
-      .select(col("doc_id"), col("text"), col("sig"),
-        lshBands(col("sig"), K, Bands).as("bands"))
-      .collect()
-    assert(engine.length >= 500)
-    engine.foreach { row =>
-      val id = row.getLong(0)
-      val text = row.getString(1)
-      val sig = row.getSeq[Long](2)
-      val bands = row.getSeq[org.apache.spark.sql.Row](3)
-        .map(b => (b.getInt(0), b.getLong(1)))
-      val expected = xxSig(text)
-      assert(sig == expected, s"doc $id: signature diverged")
-      assert(bands == bandKeys(expected), s"doc $id: band keys diverged")
-    }
+    // the operator over those claims, in batch: each bucket's smallest
+    // doc owns it and every other member is flagged against it
+    val sigOf = q51.map { case (id, sig, _) => id -> sig }.toMap
+    val replay = expected.toSeq.groupBy { case (_, band, bh, _) => (band, bh) }
+      .values.flatMap { members =>
+        val ids = members.map(_._1).sorted
+        ids.tail.map { id =>
+          val agree = sigOf(id).zip(sigOf(ids.head)).count { case (x, y) => x == y }
+          (id, ids.head, agree.toDouble / K)
+        }
+      }.toSeq.sorted
+    val streamed = DocStreams.nearDupCandidates(docs).collect()
+      .map(n => (n.doc_id, n.dup_of, n.est_jaccard)).toSeq.sorted
+    val same = replay.nonEmpty && streamed == replay
+    assert(same,
+      s"${streamed.length} candidates vs ${replay.length} replayed: " +
+        s"${streamed.diff(replay).take(3)} / ${replay.diff(streamed).take(3)}")
   }
 
   test("q55: portable group est-Jaccard matrix equals the independent JVM replay at sf0.001") {

@@ -118,4 +118,27 @@ class DocStreamsSpec extends SparkSpec {
     assert(out.forall(c => c.doc_id == 2 && c.dup_of == 1))
     assert(out.forall(_.est_jaccard > 0.3))
   }
+
+  test("gram-less documents claim no bucket and are never flagged, streamed or batched") {
+    // fewer than 3 tokens: no 3-gram to hash, so no band digest — the
+    // batch banding (q51's NULL b0..b3) proposes no pair for them either
+    val short = Seq(
+      Doc(1, t("2024-01-01 10:00:00"), "hi"),
+      Doc(2, t("2024-01-01 10:01:00"), "ok there"),
+      Doc(3, t("2024-01-01 10:02:00"), ""))
+    val batch = DocStreams.nearDupCandidates(short.toDF()).collect()
+    assert(batch.isEmpty, s"batch flagged gram-less docs: ${batch.mkString(", ")}")
+    implicit val sq = spark.sqlContext
+    val ms = MemoryStream[Doc]
+    val q = DocStreams.nearDupCandidates(ms.toDF())
+      .writeStream.format("memory").queryName("nd5").outputMode("append").start()
+    try {
+      ms.addData(short.head)
+      q.processAllAvailable()
+      ms.addData(short.tail: _*)
+      q.processAllAvailable()
+      val out = spark.table("nd5").as[NearDup].collect()
+      assert(out.isEmpty, s"stream flagged gram-less docs: ${out.mkString(", ")}")
+    } finally q.stop()
+  }
 }
