@@ -1,21 +1,45 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by iterative min-label propagation —
   * the transitive-closure step that turns pairwise near-dup hits into
   * dedup CLUSTERS (a ~ b, b ~ c ⇒ {a,b,c} share one keeper).
   *
-  * Each round every vertex adopts the smallest label in its neighborhood;
-  * rounds ≈ graph diameter (near-dup clusters are shallow — a handful).
-  * The driver loop only orchestrates (count per round); all data work is
-  * distributed joins partitioned on vertex id, and `localCheckpoint`
-  * truncates the lineage so plan size stays O(1) per round instead of
-  * growing with iterations. State per round is |V| (id, label) pairs +
-  * |E| edges — never materialized on the driver.
+  * Contraction first: a partition-local union-find turns each
+  * partition's edges into star edges (vertex, local-minimum id), so a
+  * cluster whose edges share a partition is one hop deep before any
+  * round runs. The stars have the same components as the edges they
+  * replace; only the hop count, and with it the round count, shrinks.
+  *
+  * Then each round every vertex adopts the smallest label in its
+  * neighborhood; rounds ≈ contracted diameter + 1 (near-dup clusters are
+  * shallow — a handful). The driver loop only orchestrates (one
+  * aggregate per round); all data work is distributed joins partitioned
+  * on vertex id, and `localCheckpoint` truncates the lineage so plan
+  * size stays O(1) per round instead of growing with iterations. State
+  * per round is |V| (id, label) pairs + |E| edges — never materialized
+  * on the driver; the union-find holds one partition's vertices.
   */
 object Components {
+
+  /** One partition's edges as star edges (v, min id of v's local
+    * component), v ≠ root: union-find with the smaller root winning, so
+    * every root is its component's minimum. */
+  private def localStars(es: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keysIterator.map(v => (v, find(v))).filter { case (v, r) => v != r }
+  }
 
   /** @param edges    undirected edge list, columns (src, dst), Long ids
     * @param vertices one column `id` — includes isolated vertices
@@ -23,40 +47,41 @@ object Components {
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIters: Int = 25): DataFrame = {
-    // Symmetrized edges + a self-loop per vertex, persisted ONCE and
+    val longs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val stars = edges.where(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src"), col("dst")).as(longs)
+      .mapPartitions(localStars)(longs).toDF("src", "dst")
+    // Symmetrized stars + a self-loop per vertex, persisted ONCE and
     // pre-partitioned on the probe key: the big (|E|-sized) side never
     // re-shuffles — each round only the small (id, label) table moves.
     // Self-loops make every vertex its own neighbor, so one join+groupBy
     // computes the next labeling outright (no left-join-back per round).
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = stars
+      .unionByName(stars.select(col("dst").as("src"), col("src").as("dst")))
       .unionByName(vertices.select(col("id").as("src"), col("id").as("dst")))
       .distinct()
       .repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // LAZY checkpoints throughout: the potential aggregation below is
-    // the round's ONLY action — it materializes the checkpoint as a
-    // side effect, so each round costs one Spark job, not two (eager
-    // localCheckpoint ran a dedicated materialization job per round;
-    // at small per-round data the loop was job-overhead-bound).
     var labels = vertices.select(col("id"), col("id").as("component"))
-      .localCheckpoint(eager = false)
     // Labels only ever DECREASE (min is monotone), so the label sum is a
     // strictly decreasing potential function: fixpoint ⇔ sum unchanged.
-    // One agg per round replaces a join + count. decimal(38,0) so huge
-    // id spaces can't overflow-collide.
-    def potential(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("component").cast("decimal(38,0)"))).first().getDecimal(0)
-    var cur = potential(labels)
+    // One aggregate per round is the round's ONLY action, and it also
+    // materializes the round's LAZY checkpoint. It sums the ids too:
+    // in round 1 that is the potential of the starting labels (id, id),
+    // so no job runs before the first round. decimal(38,0) so huge id
+    // spaces can't overflow-collide.
+    def total(c: String) = coalesce(sum(col(c).cast("decimal(38,0)")), lit(0))
+    var cur: java.math.BigDecimal = null
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
       val next = sym.join(labels, sym("dst") === labels("id"))
         .groupBy(col("src").as("id")).agg(min("component").as("component"))
         .localCheckpoint(eager = false)
-      val nextPot = potential(next)
-      converged = nextPot.compareTo(cur) == 0
-      cur = nextPot
+      val sums = next.agg(total("component"), total("id")).first()
+      if (iter == 0) cur = sums.getDecimal(1)
+      converged = sums.getDecimal(0).compareTo(cur) == 0
+      cur = sums.getDecimal(0)
       labels = next
       iter += 1
     }

@@ -1,5 +1,9 @@
 package graft.sources
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once-per-(JVM, corpus) derived tables — the "computed at
@@ -15,6 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * catalog cannot outlive it anyway — and the files are removed by a
   * shutdown hook. At 100 TB the same tables live in the warehouse and
   * are refreshed by the ingest pipeline, not per session.
+  *
+  * [[pinned]] is the memory-resident flavor: same key, same staleness
+  * contract, but the snapshot lives on the driver only, for small
+  * dimensions whose parquet copy would cost more than it saves.
   */
 object ArtifactStore {
 
@@ -144,6 +152,46 @@ object ArtifactStore {
         .format("parquet").option("path", s"${ssDir(s)}/$t").saveAsTable(t)
     }
     s.table(t)
+  }
+
+  /** Pinned snapshots, one per (session catalog, name, key): the
+    * `tableName` they were built under and the snapshot itself. */
+  private val pins = mutable.Map.empty[(AnyRef, String, String), (String, DataFrame)]
+
+  /** Memory-resident artifact for small dimensions: `build` is collected
+    * once per session catalog and corpus snapshot into a local relation
+    * on the driver, and every later call returns that same DataFrame
+    * with no Spark job. Keyed like the disk flavors: when the
+    * fingerprint under `key` changes, `build` runs again and the old
+    * snapshot is dropped. Nothing is written to disk, and the snapshot
+    * keeps no reference to the plan that built it (a persisted plan
+    * would hold its broadcast relations' driver-side pages). Entries die
+    * with their SparkContext: a listener on it drops them when it stops,
+    * so a session on a new context (a new catalog) builds its own
+    * snapshot and no entry keeps a stopped context reachable. */
+  def pinned(s: SparkSession, key: String, name: String)(
+      build: => DataFrame): DataFrame = synchronized {
+    val t = tableName(name, key)
+    val shared: AnyRef = s.sharedState
+    val slot = (shared, name, key)
+    pins.get(slot) match {
+      case Some((`t`, df)) => df
+      case _ =>
+        if (!pins.keys.exists(_._1 eq shared))
+          s.sparkContext.addSparkListener(new SparkListener {
+            override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+              ArtifactStore.synchronized(pins.filterInPlace((k, _) => k._1 ne shared))
+          })
+        val b = build
+        val df = s.createDataFrame(b.collect().toSeq.asJava, b.schema)
+        pins(slot) = (t, df)
+        df
+    }
+  }
+
+  /** The contexts that pinned snapshots are held for. */
+  private[graft] def pinnedContexts: Seq[org.apache.spark.SparkContext] = synchronized {
+    pins.values.map(_._2.sparkSession.sparkContext).toSeq.distinct
   }
 
   /** Day-2 increment: append a new batch into an existing bucketed

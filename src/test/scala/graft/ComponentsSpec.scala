@@ -26,15 +26,63 @@ class ComponentsSpec extends SparkSpec {
     assert(got == ((1L, 1L)))
   }
 
+  /** `es` over `parts` partitions, edge i in partition i mod parts. */
+  private def dealt(es: Seq[(Long, Long)], parts: Int) =
+    spark.sparkContext.parallelize(0 until parts, parts)
+      .flatMap(p => es.zipWithIndex.collect { case (e, i) if i % parts == p => e })
+      .toDF("src", "dst")
+
+  /** Min reachable id per vertex, by a driver-side union-find. */
+  private def expectedLabels(n: Int, es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map((1L to n).map(v => v -> v): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (1L to n).map(v => v -> find(v)).toMap
+  }
+
   test("a loop that does not converge throws instead of returning split labels") {
     val vertices = (1 to 12).map(_.toLong).toDF("id")
-    val edges = (1 until 12).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
+    val path = (1 until 12).map(i => (i.toLong, i.toLong + 1))
+    val edges = path.toDF("src", "dst")
+    // dealt round-robin, no partition holds two adjacent edges, so
+    // contraction leaves the path 11 hops deep
     val minLabel = intercept[IllegalStateException](
-      Components.connectedComponents(vertices, edges, maxIters = 1))
-    assert(minLabel.getMessage.contains("did NOT converge in 1 iterations"))
+      Components.connectedComponents(vertices, dealt(path, 4), maxIters = 2))
+    assert(minLabel.getMessage.contains("did NOT converge in 2 iterations"))
     val star = intercept[IllegalStateException](
       Components.connectedComponentsStar(vertices, edges, maxIters = 1))
     assert(star.getMessage.contains("did NOT converge in 1 alternation rounds"))
+  }
+
+  test("contraction: a path held by one partition converges in two rounds") {
+    // the partition's union-find makes the whole path one star: round 1
+    // labels every vertex, round 2 finds nothing left to change
+    val vertices = (1 to 12).map(_.toLong).toDF("id")
+    val path = (1 until 12).map(i => (i.toLong, i.toLong + 1))
+    val got = Components.connectedComponents(vertices, dealt(path, 1), maxIters = 2)
+      .as[(Long, Long)].collect().toMap
+    assert(got == expectedLabels(12, path))
+  }
+
+  test("contraction keeps the labels of adversarial graphs spread over 4+ partitions") {
+    val rnd = new scala.util.Random(56)
+    val cases: Seq[(String, Int, Seq[(Long, Long)])] = Seq(
+      ("path", 64, (1 until 64).map(i => (i.toLong, i + 1L))),
+      ("cycle", 32, (1 until 32).map(i => (i.toLong, i + 1L)) :+ ((32L, 1L))),
+      ("star at max id", 20, (1 until 20).map(i => (20L, i.toLong))),
+      ("random sparse", 50, Seq.fill(40)((rnd.nextInt(50) + 1L, rnd.nextInt(50) + 1L))),
+      ("random sparse", 80, Seq.fill(70)((rnd.nextInt(80) + 1L, rnd.nextInt(80) + 1L))))
+    for ((name, n, es) <- cases; parts <- Seq(4, 7)) {
+      val vertices = (1 to n).map(_.toLong).toDF("id")
+      val edges = dealt(es, parts)
+      assert(edges.rdd.getNumPartitions == parts)
+      val got = Components.connectedComponents(vertices, edges, maxIters = 80)
+        .as[(Long, Long)].collect().toMap
+      assert(got == expectedLabels(n, es), s"$name n=$n over $parts partitions")
+    }
   }
 
   test("q56 dedup clusters covers every doc and keepers are cluster minima") {

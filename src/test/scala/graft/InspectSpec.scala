@@ -68,4 +68,13 @@ class InspectSpec extends SparkSpec {
       assert(warm.forall(_._2 == 0), warm)
     } finally spark.conf.set(aqe, prev)
   }
+
+  test("a warm run of q147 and q56 launches no job that rebuilds what the first run holds") {
+    def jobs(q: String) = Inspect.collect(spark)(SparkEntry.queries(q)(spark, d).collect())._2.jobs
+    val warm = Seq("q147_streaming_poc", "q56_dedup_clusters").map { q => jobs(q); q -> jobs(q) }
+    // the parent of the pinned snapshots and the contraction ran 17 and 22: q147 rebuilt
+    // bar_stock and cocktails inside its first micro-batch, and q56 ran a potential job
+    // and 3 min-label rounds instead of 2
+    assert(warm == Seq("q147_streaming_poc" -> 7, "q56_dedup_clusters" -> 16), warm)
+  }
 }

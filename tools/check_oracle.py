@@ -47,7 +47,22 @@ def record(name, rows_match=False, schema_match=False, hash_match=False,
     report[name] = {"rows_match": rows_match, "schema_match": schema_match,
                     "hash_match": hash_match, "spark_rows": spark_rows,
                     "oracle_rows": oracle_rows, "err": err}
-con = duckdb.connect()
+def memory_limit():
+    """A quarter of the host's memory (at least 1 GB). DuckDB's default is
+    80% of RAM, so one large oracle could take a shared host; under the
+    cap it spills to temp_directory or fails, and the failure prints as
+    ERROR like any other exception."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "2GB"
+    return f"{max(kb // 4096, 1024)}MB"
+
+limit = memory_limit()
+print(f"[duckdb] memory_limit={limit} temp_directory={out_dir}/duckdb_tmp")
+con = duckdb.connect(config={"memory_limit": limit,
+                             "temp_directory": f"{out_dir}/duckdb_tmp"})
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
