@@ -120,15 +120,15 @@ object PlanAudit {
     * scalar/handful-row table), k-bounded (a fixed literal axis),
     * |sources|-bounded (the source axis — 20 distinct on this corpus,
     * TestdataDriftSpec pins the constant), dim-bounded (a static
-    * dimension, not the fact table), P-bounded (one row per shuffle
-    * partition — the contiguousId offsets prefix-sum). Anything
-    * vocab-/pair-/data-GROWING must instead use Clean.keyedGroupRank,
-    * which leaves NO zero-key window in the plan (q329's form).
+    * dimension, not the fact table). Anything vocab-/pair-/data-GROWING
+    * must instead use Clean.keyedPrefixRank (ordered ranks) or
+    * Clean.hashBucketRank (equality-only ids, q329's form), which leave
+    * NO zero-key window in the plan.
     * PlanShapeSpec's sweep fails on any site not listed here.
     */
   val zeroKeyWindowAllowlist: Map[String, String] = Map(
     "q07_surrogate_key" ->
-      "!dim-bounded: reference-P4 parity rank over the supplier dimension; fact-scale keys use keyedOrderedId/contiguousId",
+      "!dim-bounded: reference-P4 parity rank over the supplier dimension; fact-scale keys use keyedOrderedId/keyedPrefixRank/hashBucketRank",
     "q124_bm25_retrieval" ->
       "limit-bounded: rank over a 20-row TakeOrderedAndProject result",
     "q140_budget_selection" ->

@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Mutable bounded top-k buffer: flat long arrays, trimmed at 4k —
-  * same algebra as [[TopKAgg]] (trim preserves the top-k multiset, so
-  * merges are split/commute-safe) without any per-row object churn.
+/** Mutable bounded top-k buffer: flat long arrays, trimmed at 4k (trim
+  * preserves the top-k multiset, so merges are split/commute-safe)
+  * without any per-row object churn.
   */
 final class TopKBuffer(val k: Int) {
   var ords = new Array[Long](math.min(4 * k, 64))
@@ -56,13 +56,15 @@ object TopKBuffer {
   }
 }
 
-/** Raw-Catalyst bounded top-k aggregate (`topk_agg(ord, id, k)` in SQL) —
-  * the TypedImperativeAggregate form of [[TopKAgg]]: the buffer is a
-  * plain JVM object mutated in place, serialized ONLY at the partial/
-  * final exchange boundary (16 bytes per kept row), with none of the
-  * per-row encoder round-trips a `udaf()` Aggregator pays. Same
-  * exchange-volume bound: serialize() trims first, so O(groups × k) rows
-  * cross the wire. NULL ord/id rows are skipped — standard SQL aggregate
+/** Raw-Catalyst bounded top-k aggregate (`topk_agg(ord, id, k)` in SQL):
+  * keeps the k largest (ord, id) pairs per group, ord descending, id
+  * ascending as the deterministic tiebreak. The scale-correct form of
+  * "top N per group": the `row_number` ≤ k window shuffles and sorts every
+  * row, while this aggregate combines map-side. The buffer is a plain JVM
+  * object mutated in place, serialized ONLY at the partial/final exchange
+  * boundary (16 bytes per kept row), with none of the per-row encoder
+  * round-trips a `udaf()` Aggregator pays; serialize() trims first, so
+  * O(groups × k) rows cross the wire. NULL ord/id rows are skipped — standard SQL aggregate
   * semantics (like sum/max), NOT the window-form NULLS LAST ranking.
   */
 case class TopKNative(ordExpr: Expression, idExpr: Expression, k: Int,

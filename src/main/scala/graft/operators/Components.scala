@@ -66,7 +66,8 @@ object Components {
     // Labels only ever DECREASE (min is monotone), so the label sum is a
     // strictly decreasing potential function: fixpoint ⇔ sum unchanged.
     // One aggregate per round is the round's ONLY action, and it also
-    // materializes the round's LAZY checkpoint. It sums the ids too:
+    // materializes the round's checkpoint (under AQE the checkpoint call
+    // already ran the round's shuffle stages). It sums the ids too:
     // in round 1 that is the potential of the starting labels (id, id),
     // so no job runs before the first round. decimal(38,0) so huge id
     // spaces can't overflow-collide.

@@ -1539,6 +1539,8 @@ object CurationQueries {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing)
+      // the pin stays: unpinned, the zero-key cumulative windows reach the plan and fail
+      // PlanShapeSpec's window allowlist
       val cum = vc
         .withColumn("cum_n", sum("n").over(wOrd))
         .withColumn("cum_pos", sum("n_pos").over(wOrd))
@@ -1607,10 +1609,9 @@ object CurationQueries {
           classifierScoreNative(coalesce(col("text"), lit("")))
             .getField("score").as("score"))
       // the (score, source) value-count rollup feeds FOUR legs (decile
-      // map, mixture, totals twice via m) — materialize it once so the
-      // corpus is scanned once (q279's bounded-rollup convention)
+      // map, mixture, totals twice via m); they share its exchange, so
+      // the corpus is scanned once
       val vc = j.groupBy("score", "source").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false)
       val sc = vc.groupBy("score").agg(sum("n").as("sn"))
       val cum = sc
         .withColumn("cum_n", sum("sn").over(Window.orderBy(col("score").desc)
@@ -1996,6 +1997,7 @@ object CurationQueries {
           .select(col("source"), col("sb"), coalesce(col("c"), lit(0L)).as("c"))
         val cum = grid.withColumn("below",
           sum("c").over(Window.partitionBy("source").orderBy("sb")) - col("c"))
+        // the pin below stays: unpinned at sf0.01, a warm build plus one run took 29 jobs, not 25
         val pairs = cum.toDF("src_a", "sb", "ca", "belowa")
           .join(cum.toDF("src_b", "sb", "cb", "belowb"), Seq("sb"))
           .filter(col("src_a") =!= col("src_b"))
@@ -2201,6 +2203,7 @@ object CurationQueries {
         val co = buckets(docs.filter(expr(oldPred)),
           graft.operators.ExtensionQueries.snapshotOldText)
         val cn = buckets(docs.filter(expr(newPred)), col("text"))
+        // the pin stays: unpinned, q349 ran 1.08-1.20x its pinned time in three sf0.1 windows
         val j = co.select(col("bucket"), col("c").as("c_old"))
           .join(cn.select(col("bucket"), col("c").as("c_new")),
             Seq("bucket"), "full_outer")
@@ -2407,8 +2410,8 @@ object CurationQueries {
       val pv = vc.groupBy("source", "v").agg(sum("c").as("t"))
       val w = Window.partitionBy("source").orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      // the group join and the tie rollup share it
       val cum = pv.withColumn("before_t", sum("t").over(w) - col("t"))
-        .localCheckpoint(false) // group join and the tie rollup share it
       val grp = vc.join(cum, Seq("source", "v"))
         .groupBy("source", "lang")
         .agg(sum("c").as("n_g"),

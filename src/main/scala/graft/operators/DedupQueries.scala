@@ -196,7 +196,7 @@ object DedupQueries {
       // materialized once (it's tiny): three consumers below — without
       // this the whole minhash+banding pipeline re-executes per consumer
       val cand = portablePairs(s, d)
-        .localCheckpoint(false) // lazy: construction stays side-effect-free
+        .localCheckpoint(false) // an artifact read, no exchange: no job while built
       // compute grams ONLY for docs that appear in a candidate pair: the
       // broadcast semi-join restricts the scan BEFORE the (expensive)
       // gram projection, so gram cost is O(candidates), not O(corpus)
@@ -1639,6 +1639,9 @@ object DedupQueries {
        |FROM ex JOIN nd na ON na.doc_id = ex.ia
        |        JOIN nd nb ON nb.doc_id = ex.ib""".stripMargin})(
     (s, d) => {
+      // the distinct reads the gh-bucketed artifact with no exchange, so
+      // there is none to reuse: unpinned, each of the five consumers
+      // re-reads it (Inspect time at sf0.01: task CPU 1.13 -> 1.78 s)
       val dg = storedGramPositions(s, d, SpanK)
         .select("doc_id", "gh").distinct()
         .localCheckpoint(false) // five consumers below share one derivation
@@ -1734,6 +1737,8 @@ object DedupQueries {
   /** Spark twin of [[recallAuditOracle]]; crossOnly mirrors crossCond. */
   private def recallAuditFrame(s: SparkSession, d: String,
       crossOnly: Boolean): DataFrame = {
+    // no exchange under the distinct (a bucketed artifact read), so the
+    // pin stays, as in q193 (unpinned, q195's task CPU went 1.18 -> 1.72 s)
     val dg = storedGramPositions(s, d, 3)
       .select("doc_id", "gh").distinct()
       .localCheckpoint(false) // shared by the cap, counts, and both recount sides
@@ -2486,6 +2491,7 @@ object DedupQueries {
     (s, d) => {
       import graft.functions.TextFunctions.{qualityScore, tokenCount}
       val labels = clusterLabels(s, d)
+      // the pin stays: unpinned at sf0.01, a warm build plus one run took 8 jobs, not 7
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"),
           coalesce(tokenCount(col("text")).cast("long"), lit(0L)).as("n_tok"),
@@ -3122,8 +3128,9 @@ object DedupQueries {
     * trillions of rows through one task at 100 TB). The doubling only
     * ever tests rank EQUALITY, which is why the equality-only hash form
     * (one keyed exchange, no range-sampling pass, no driver action)
-    * beats the order-consistent keyedGroupRank here. Each round's pair
-    * table is pinned once (lazy localCheckpoint) for its two consumers
+    * beats an order-consistent range-partitioned rank here. Each round's
+    * pair table is pinned once (localCheckpoint; under AQE it runs the
+    * round's shuffles while the chain is built) for its two consumers
     * (the distinct and the join-back). Returns (per-doc token lengths,
     * rank table per round 1..maxRound).
     */
@@ -3583,7 +3590,7 @@ object DedupQueries {
       val ed = e.select(col("ia").as("u"), col("ib").as("v"))
         .unionByName(e.select(col("ib").as("u"), col("ia").as("v")))
         .localCheckpoint(false) // one artifact scan feeds all three rounds
-      val verts = ed.select("u").distinct().localCheckpoint(false)
+      val verts = ed.select("u").distinct()
       var l = verts.select(col("u"), col("u").as("lbl"))
       val w = Window.partitionBy("u").orderBy(col("cnt").desc, col("lbl"))
       for (_ <- 1 to 3) {

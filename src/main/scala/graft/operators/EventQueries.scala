@@ -1737,6 +1737,7 @@ object EventQueries {
     (s, d) => {
       // the session window runs ONCE — base/c2/c3 all read the pinned
       // result instead of re-running the user-keyed window three times
+      // the pin stays: unpinned at sf0.01, a warm build plus one run took 13 jobs, not 12
       val sess = sessionized(s, d)
         .select(col("user_id"), col("session_id"), col("ts"), col("event_type"))
         .localCheckpoint(false)
@@ -1817,6 +1818,8 @@ object EventQueries {
          |${arms.mkString("\nUNION ALL\n")}""".stripMargin)(
       (s, d) => {
         val w = Window.partitionBy("user_id").orderBy("es", "event_id")
+        // the pin stays: unpinned, every arm re-sorts and re-runs the window; q319 ran 1.08-1.56x
+        // its pinned time in three sf0.1 windows
         val t = Tables.events(s, d)
           .select(col("user_id"), col("event_id"),
             unix_timestamp(col("ts")).as("es"))
@@ -1909,6 +1912,8 @@ object EventQueries {
         val w = bm.select(col("b"), max("mx").over(
           Window.orderBy("b")
             .rowsBetween(Window.unboundedPreceding, -1)).as("pm"))
+        // the pin stays: a broadcast join has no exchange to reuse, so unpinned every arm re-scans
+        // events
         val t = e.join(broadcast(w), Seq("b"))
           .localCheckpoint(false) // one joined pass feeds all five arms
         WatermarkDelays.map { g =>
@@ -2041,8 +2046,8 @@ object EventQueries {
     * arm: users, raw mean Y, CUPED-adjusted mean Y (micro), with the
     * global θ and variance reduction alongside — the measured answer to
     * "how much A/B sample does the pre-period buy us". Scale shape: one
-    * scan + 1-row split broadcast → user-keyed rollup (pinned — feeds
-    * pooled moments AND per-arm sums) → 1-row moment table broadcast to
+    * scan + 1-row split broadcast → user-keyed rollup (one exchange
+    * feeds pooled moments AND per-arm sums) → 1-row moment table broadcast to
     * a 2-row output. Output: one row per arm. HASH-MATCHED. */
   val q327 = QueryDef.oracle("q327_cuped",
     s"""WITH e AS (SELECT user_id,
@@ -2091,15 +2096,14 @@ object EventQueries {
         .select(col("user_id"), unix_timestamp(col("ts")).as("es"),
           floor(col("value") * 100).cast("long").as("cents"))
       val sp = e.agg(expr("(MIN(es) + MAX(es)) div 2").as("mid"))
-      // the user rollup feeds the pooled moments AND the per-arm sums:
-      // pin it once
+      // the user rollup feeds the pooled moments AND the per-arm sums,
+      // both from its one exchange
       val a = e.crossJoin(broadcast(sp)).groupBy("user_id")
         .agg(sum(when(col("es") < col("mid"), col("cents")).otherwise(0L))
           .as("x"),
           sum(when(col("es") >= col("mid"), col("cents")).otherwise(0L))
             .as("y"))
         .select(abArmCol.as("arm"), col("x"), col("y"))
-        .localCheckpoint(false)
       val m = a.agg(count(lit(1)).as("n"),
         sum(expr("CAST(x AS DECIMAL(38,0))")).as("sx"),
         sum(expr("CAST(y AS DECIMAL(38,0))")).as("sy"),
@@ -2198,6 +2202,8 @@ object EventQueries {
         val sp = ec.agg(min("hs").as("h0"), max("hs").as("h1"))
         val ax = sp.select(explode(expr("sequence(h0, h1)")).as("hs"))
         val ty = ec.select("event_type").distinct()
+        // the pin stays: unpinned (21 -> 14 jobs at sf0.01), q330 still ran 1.27-1.30x its pinned
+        // time in three sf0.1 windows
         val grid = ty.crossJoin(broadcast(ax))
           .join(ec, Seq("event_type", "hs"), "left")
           .select(col("event_type"), col("hs"),
@@ -2529,8 +2535,7 @@ object EventQueries {
       val dc = Tables.events(s, d)
         .select(col("event_type"),
           expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
-        .localCheckpoint(false) // stats and the deviation walk share it
+        .groupBy("event_type", "day").agg(count(lit(1)).as("x")) // stats + deviation walk
       val st = dc.groupBy("event_type").agg(count(lit(1)).as("n_days"),
         expr("CAST(SUM(CAST(x AS DECIMAL(38,0))) * 1000000 div count(*)" +
           " AS DECIMAL(38,0))").as("ref_micro"))
@@ -2701,16 +2706,14 @@ object EventQueries {
           expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").as("day"),
           expr("CAST(round(value * 1000000) AS BIGINT)").as("v_micro"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("n_i"),
-          sum("v_micro").cast("decimal(38,0)").as("s_i"))
-        .localCheckpoint(false) // totals + replicates read one rollup
+          sum("v_micro").cast("decimal(38,0)").as("s_i")) // totals + replicates
       val tot = dv.groupBy("event_type").agg(count(lit(1)).as("d"),
         sum("n_i").cast("decimal(38,0)").as("n_tot"),
         sum("s_i").cast("decimal(38,0)").as("s_tot"))
       val rep = dv.join(tot, Seq("event_type"))
         .filter(col("d") >= 2 && col("n_tot") > col("n_i"))
         .select(col("event_type"), col("d"), col("n_tot"), col("s_tot"),
-          expr("(s_tot - s_i) div (n_tot - n_i)").as("r_i"))
-        .localCheckpoint(false) // mean pass + spread pass
+          expr("(s_tot - s_i) div (n_tot - n_i)").as("r_i")) // mean pass + spread pass
       val mu = rep.groupBy("event_type").agg(
         max("d").cast("long").as("n_days"),
         max("n_tot").cast("long").as("n_events"),
@@ -2785,8 +2788,7 @@ object EventQueries {
       val dc = Tables.events(s, d)
         .select(col("event_type"),
           expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
-        .localCheckpoint(false) // dow rollup + totals share it
+        .groupBy("event_type", "day").agg(count(lit(1)).as("x")) // dow rollup + totals
       val dw = dc.groupBy(col("event_type"), (col("day") % 7).as("dow"))
         .agg(count(lit(1)).as("n_w"),
           sum("x").cast("decimal(38,0)").as("s_w"))

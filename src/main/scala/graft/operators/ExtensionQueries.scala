@@ -319,10 +319,11 @@ object ExtensionQueries {
       .unpivot(Array(col("o_orderkey")),
         Array(col("price_cents"), col("cust")), "metric", "val"))
 
-  /** Top-3 lineitems per part via the bounded-heap TopKAgg — map-side
-    * combinable, so the exchange carries O(parts × k) buffer rows instead
-    * of every lineitem (contrast q82's window form, which must shuffle
-    * all rows). Oracle: the equivalent row_number window query.
+  /** Top-3 lineitems per part via the bounded top-k aggregate
+    * (`topk_agg`, [[graft.functions.TopKNative]]) from the DataFrame API —
+    * map-side combinable, so the exchange carries O(parts × k) buffer rows
+    * instead of every lineitem (contrast q82's window form, which must
+    * shuffle all rows). Oracle: the equivalent row_number window query.
     */
   val q88 = QueryDef.oracle("q88_topk_per_key_agg",
     """SELECT l_partkey, price_cents, tiebreak_id FROM (
@@ -335,23 +336,21 @@ object ExtensionQueries {
       |  FROM lineitem)
       |WHERE rn <= 3""".stripMargin)(
     (s, d) => {
-      val topk = graft.functions.TopKAgg.column(3)
+      graft.functions.HashFunctions.registerAll(s)
       Tables.lineitem(s, d)
         .groupBy("l_partkey")
-        .agg(topk(floor(col("l_extendedprice") * 100).cast("long"),
-          col("l_orderkey") * 100 + col("l_linenumber")).as("tk"))
+        .agg(call_function("topk_agg", floor(col("l_extendedprice") * 100).cast("long"),
+          col("l_orderkey") * 100 + col("l_linenumber"), lit(3)).as("tk"))
         .select(col("l_partkey"), explode(col("tk")).as("t"))
-        .select(col("l_partkey"), col("t._1").as("price_cents"),
-          col("t._2").as("tiebreak_id"))
+        .select(col("l_partkey"), col("t.ord").as("price_cents"),
+          col("t.id").as("tiebreak_id"))
     })
 
-  /** Same top-3-per-part workload through the raw-Catalyst
-    * TypedImperativeAggregate (`topk_agg`): the buffer mutates in place
-    * and serializes only at the exchange — no per-row encoder
-    * round-trips. Same window-form oracle as q88; the implementations
-    * agree exactly on non-null inputs (these columns are non-null —
-    * topk_agg itself skips NULLs like any SQL aggregate, whereas the
-    * window form would rank them NULLS LAST).
+  /** Same top-3-per-part workload as q88 through SQL (`topk_agg` in a
+    * GROUP BY with a LATERAL VIEW explode). Same window-form oracle; the
+    * two agree exactly on non-null inputs (these columns are non-null —
+    * topk_agg skips NULLs like any SQL aggregate, whereas the window
+    * form would rank them NULLS LAST).
     */
   val q89 = QueryDef.oracle("q89_topk_native_agg",
     """SELECT l_partkey, price_cents, tiebreak_id FROM (
@@ -1547,8 +1546,7 @@ object ExtensionQueries {
           df.withColumn("w", expr(s"w | shiftright(w, $i)")))
         val sr = sm
           .withColumn("rho", expr("47L - CAST(bit_count(w) AS BIGINT)"))
-          .groupBy("shard", "bucket").agg(max("rho").as("mx"))
-          .localCheckpoint(false) // <=512 rows feed three estimator legs
+          .groupBy("shard", "bucket").agg(max("rho").as("mx")) // <=512 rows, three legs
         val shz = sr.select(
           concat(lit("shard_"), col("shard").cast("string")).as("grp"),
           col("bucket"), col("mx"))
@@ -2333,6 +2331,7 @@ object ExtensionQueries {
         val c = Tables.customer(s, d).filter(expr(cf))
         val o = Tables.orders(s, d).filter(expr(of))
         val l = Tables.lineitem(s, d).filter(expr(lf))
+        // the two pins stay: unpinned at sf0.01, a warm build plus one run took 25 jobs, not 18
         val co = c.join(o, col("o_custkey") === col("c_custkey"))
           .localCheckpoint(false) // counted AND extended to the final
         val nC = c.agg(count(lit(1)).as("n_c"))
@@ -2522,8 +2521,7 @@ object ExtensionQueries {
         val f = Tables.documents(s, d)
           .select(explode(tokens(col("text"))).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("nrows"))
-          .withColumn("h", portableStringHash(col("tok")))
-          .localCheckpoint(false) // one rollup feeds all four candidates
+          .withColumn("h", portableStringHash(col("tok"))) // one rollup, four candidates
         f.withColumn("p", explode(array(cands.map(c => lit(c.toLong)): _*)))
           .withColumn("b", col("h") % col("p")) // h ∈ [0, 1e9+7): plain mod
           .groupBy("p", "b").agg(sum("nrows").as("load"))

@@ -1942,6 +1942,8 @@ object ModelPrepQueries {
       val isEval = col("doc_id") % 5 === 0
       val tr = docs.filter(!isEval).withColumn("h", md5(col("text")))
       val keep = tr.groupBy("h").agg(min("doc_id").as("keeper_id"))
+      // the pin stays: unpinned, q343 ran a median 1.04x its pinned time
+      // over six sf0.1 windows
       val tagged = tr.join(keep, Seq("h"))
         .withColumn("variant", explode(
           when(col("doc_id") === col("keeper_id"),
@@ -1950,8 +1952,7 @@ object ModelPrepQueries {
         .localCheckpoint(false) // feeds counts and the doc rollup
       val cv = tagged
         .select(col("variant"), explode(tokens(col("text"))).as("tok"))
-        .groupBy("variant", "tok").agg(count(lit(1)).as("c"))
-        .localCheckpoint(false) // feeds totals and the eval join
+        .groupBy("variant", "tok").agg(count(lit(1)).as("c")) // totals + the eval join
       val tv = cv.groupBy("variant").agg(sum("c").as("t_train"))
       val nd = tagged.groupBy("variant").agg(count(lit(1)).as("n_train_docs"))
       val va = docs.select(explode(tokens(col("text"))).as("tok"))
@@ -2060,11 +2061,16 @@ object ModelPrepQueries {
     (s, d) => looSourceValuation(s, d, pin = true))
 
   /** q344's builder, pin-parameterized: the query runs with every shared
-    * fragment pinned (lazy localCheckpoint — the rollup, the axis, and
-    * the report table each compute once); PlanShapeSpec audits the UNPINNED
+    * fragment pinned (localCheckpoint — the rollup, the axis, and the
+    * report table each compute once); PlanShapeSpec audits the UNPINNED
     * form, where the whole lineage is one visible tree, to assert the
     * subtractive shape mechanically: exactly ONE Generate (= one corpus
-    * token scan) in the entire plan. */
+    * token scan) in the entire plan. The pins stay: the consumers filter
+    * the rollup and the report table on grouping columns (`is_eval`,
+    * `variant`), Spark pushes those filters below the aggregates, and the
+    * consumers then share no exchange: at sf0.01 (local[4]) a warm build
+    * plus one run took 33 jobs unpinned, 29 with only the rollup and the
+    * report table pinned, and 21 with every pin. */
   private[graft] def looSourceValuation(s: SparkSession, d: String,
       pin: Boolean): DataFrame = {
     def maybePin(df: DataFrame): DataFrame =
@@ -2200,6 +2206,7 @@ object ModelPrepQueries {
         .removableSpanStarts(s, d, Seq(5))
         .filter(col("doc_id") % 5 =!= 0)
         .groupBy("doc_id").agg(collect_set(col("i0")).as("ps"))
+      // the pin stays: unpinned, q355 ran 1.12-1.16x its pinned time in three sf0.1 windows
       val tr = docs.filter(!isEval)
         .select(col("doc_id"), tokens(col("text")).as("l"))
         .join(ps, Seq("doc_id"), "left")
@@ -2211,8 +2218,7 @@ object ModelPrepQueries {
       val tt = tr.select(lit("full").as("variant"), explode(col("l")).as("tok"))
         .unionByName(tr.select(lit("span_dedup").as("variant"),
           explode(col("kept")).as("tok")))
-      val cv = tt.groupBy("variant", "tok").agg(count(lit(1)).as("c"))
-        .localCheckpoint(false) // feeds totals and the eval join
+      val cv = tt.groupBy("variant", "tok").agg(count(lit(1)).as("c")) // totals + eval join
       val vax = Seq("full", "span_dedup").toDF("variant")
       val tv = vax.join(cv.groupBy("variant").agg(sum("c").as("t")),
           Seq("variant"), "left")
@@ -2367,7 +2373,6 @@ object ModelPrepQueries {
         .agg(coalesce(sum(tokenCount(coalesce(col("text"), lit(""))).cast("long")),
           lit(0L)).as("u_tok"))
         .withColumn("wt", floor(sqrt(col("u_tok").cast("double"))).cast("long"))
-        .localCheckpoint(false) // |sources| rows feed totals and the report
       val t = u.agg(sum("u_tok").as("u_tot"), sum("wt").as("w_tot"))
       u.crossJoin(broadcast(t))
         .withColumn("budget",
@@ -2467,8 +2472,7 @@ object ModelPrepQueries {
         .select(explode(array(lit(1L), lit(2L), lit(4L), lit(8L))).as("m")))
       val cr = base.filter(!col("is_eval"))
         .join(rungs, col("g") < col("m"))
-        .groupBy("m", "tok").agg(sum("c").as("c"))
-        .localCheckpoint(false) // feeds totals and the eval join
+        .groupBy("m", "tok").agg(sum("c").as("c")) // feeds totals and the eval join
       val tr = cr.groupBy("m").agg(sum("c").as("t_train"))
       val nd = docs.filter(!isEval).join(rungs, col("g") < col("m"))
         .groupBy("m").agg(count(lit(1)).as("n_docs"))
@@ -2484,8 +2488,7 @@ object ModelPrepQueries {
         .agg(sum(col("mm") * col("micro_bits")).as("micro_sum"),
           sum("mm").as("eval_tokens"))
         .withColumn("mbits_per_token",
-          expr("CAST(micro_sum div eval_tokens AS BIGINT)"))
-        .localCheckpoint(false) // read twice: rungs and their half rungs
+          expr("CAST(micro_sum div eval_tokens AS BIGINT)")) // read by rungs + half rungs
       val prev = fin.select(col("m").as("__pm"),
         col("mbits_per_token").as("__pmb"))
       fin.join(broadcast(tr), Seq("m")).join(broadcast(nd), Seq("m"))
@@ -2571,11 +2574,9 @@ object ModelPrepQueries {
         .groupBy("grp", "source", "w1", "w2").agg(count(lit(1)).as("c"))
         .localCheckpoint(false) // feeds the train tables AND the eval stream
       val tr2 = base.filter(col("grp") === "train")
-        .groupBy("w1", "w2").agg(sum("c").as("c2"))
-        .localCheckpoint(false) // feeds c1, the unigram table, and the join
+        .groupBy("w1", "w2").agg(sum("c").as("c2")) // c1, the unigram table, the join
       val tr1 = tr2.groupBy("w1").agg(sum("c2").as("c1"))
-      val uni = tr2.groupBy("w2").agg(sum("c2").as("cu"))
-        .localCheckpoint(false) // feeds totals and the backoff join
+      val uni = tr2.groupBy("w2").agg(sum("c2").as("cu")) // totals + the backoff join
       val tot = uni.agg(coalesce(sum("cu"), lit(0L)).as("n"),
         count(lit(1)).as("v"))
       val ev = base.filter(col("grp") === "eval")

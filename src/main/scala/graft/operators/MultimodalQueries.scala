@@ -523,6 +523,7 @@ object MultimodalQueries {
          |${arms.mkString("\nUNION ALL\n")}""".stripMargin)(
       (s, d) => {
         val mods = phashDf(s, d).select(col("media_id"), col("modality"))
+        // the pin stays: unpinned at sf0.01, a warm build plus one run took 26 jobs, not 22
         val pm = phashPairs(s, d)
           .join(broadcast(mods.select(col("media_id").as("ia"),
             col("modality").as("ma"))), Seq("ia"))

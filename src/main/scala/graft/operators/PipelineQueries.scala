@@ -212,10 +212,16 @@ object PipelineQueries {
         try q.processAllAvailable() finally q.stop()
         // conf stays lowered until the stream STOPS: start() is async, so
         // restoring earlier could race the first micro-batch's planning
+        // a guard: the sentinel's window never closes, so no sentinel row
+        // reaches the sink
+        s.table(table).filter(col("drink") =!= "zzz-sentinel")
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        // the resolved frame holds the sink and its rows; the catalog
+        // must not, or every run would leave one more view behind
+        s.catalog.dropTempView(table)
         // the pinned dimensions stay: the next start reads them
-        // the memory-sink table, not the staged files, holds the result —
+        // the memory sink, not the staged files, holds the result —
         // the per-invocation feed copies can go now (bench sweeps would
         // otherwise accumulate them in tmpdir). INSIDE the finally so a
         // failed streaming lifecycle doesn't strand its copy; best-effort
@@ -227,9 +233,6 @@ object PipelineQueries {
           finally walk.close()
         } catch { case _: Throwable => () }
       }
-      // a guard: the sentinel's window never closes, so no sentinel row
-      // reaches the sink
-      s.table(table).filter(col("drink") =!= "zzz-sentinel")
     })
 
   val defs: Seq[QueryDef] = Seq(q70, q76, q131, q147)

@@ -176,7 +176,7 @@ object TextQueries {
       val total = freq.agg(sum("freq").as("total"))
       // the freq table is VOCAB-sized (grows with the corpus), so the
       // rank/cumsum must be the keyed two-level form — never a global
-      // window (r13 verdict #4; q329's keyedGroupRank is the sibling)
+      // window (r13 verdict #4; q329's hashBucketRank is the sibling)
       graft.pipeline.Clean.keyedPrefixRank(freq,
           Seq(col("freq").desc, col("tok")), "rnk",
           cumOf = Some("freq" -> "cum_freq"))
@@ -2201,6 +2201,7 @@ object TextQueries {
       |                 // s.sum_log_micro AS BIGINT) END AS alpha_micro
       |FROM k JOIN xr ON xr.lang = k.lang JOIN s ON s.lang = k.lang""".stripMargin)(
     (s, d) => {
+      // the pin stays: unpinned, PlanShapeSpec's broadcast audit flags q362
       val r = Tables.documents(s, d)
         .select(col("lang"), col("doc_id"), col("n_chars"))
         .withColumn("rn", row_number().over(Window.partitionBy("lang")
@@ -2281,10 +2282,8 @@ object TextQueries {
         .select(col("source"),
           substring_index(col("gram"), " ", 1).as("cur"),
           substring_index(col("gram"), " ", -1).as("nxt"))
-        .groupBy("source", "cur", "nxt").agg(count(lit(1)).as("c2"))
-        .localCheckpoint(false) // feeds the marginal, totals, and H2
-      val g1 = g2.groupBy("source", "cur").agg(sum("c2").as("c1"))
-        .localCheckpoint(false) // feeds totals, H1, and the H2 join
+        .groupBy("source", "cur", "nxt").agg(count(lit(1)).as("c2")) // marginal, totals, H2
+      val g1 = g2.groupBy("source", "cur").agg(sum("c2").as("c1")) // totals, H1, H2 join
       val st = g1.groupBy("source").agg(sum("c1").as("n2"))
       val h2 = g2.join(g1, Seq("source", "cur"))
         .groupBy("source")
@@ -2357,8 +2356,7 @@ object TextQueries {
     (s, d) => {
       val f = Tables.documents(s, d)
         .select(explode(tokens(col("text"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("freq"))
-        .localCheckpoint(false) // total and counts-of-counts read one rollup
+        .groupBy("tok").agg(count(lit(1)).as("freq")) // total + counts-of-counts
       val t = f.agg(sum("freq").cast("decimal(38,0)").as("n_tok"))
       // 9-bounded BEFORE the broadcast: the full counts-of-counts table
       // grows with the corpus (max freq rises), the r <= 9 slice doesn't

@@ -35,7 +35,7 @@ object Clean {
     * Scale note: row_number over an empty partitionBy is a single-task
     * window — acceptable ONLY for bounded dimensions. Facts use
     * [[keyedOrderedId]] (same deterministic ordered semantics, keyed
-    * windows only) or [[contiguousId]] (order-free, cheapest).
+    * windows only).
     */
   def orderedId(df: DataFrame, name: String, sortCols: Seq[Column]): DataFrame =
     df.withColumn(name, row_number().over(Window.orderBy(sortCols: _*)).cast("long") - 1)
@@ -82,70 +82,6 @@ object Clean {
       .drop(pk ++ ok ++ Seq("__local", "__off"): _*)
   }
 
-  /** Contiguous unique 0-based ids without a global sort, staying in the
-    * DataFrame layer (Tungsten/codegen end to end — no RDD round-trip):
-    * `monotonically_increasing_id` is `(partitionId << 33) + consecutive
-    * row index`, so masking the low 33 bits yields the per-partition
-    * index; per-partition counts prefix-sum into offsets (tiny table,
-    * one row per partition) and broadcast back. Ids depend on
-    * partitioning, so they are unique+contiguous but not tied to a
-    * column order — the documented relaxation for fact-scale keys
-    * (SURVEY.md §7 risk register).
-    */
-  def contiguousId(df: DataFrame, name: String): DataFrame = {
-    val withMid = df
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .withColumn("__local", monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-    val wKeys = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = withMid.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", sum("__cnt").over(wKeys) - col("__cnt"))
-      .select(col("__pid").as("__opid"), col("__off"))
-    withMid.join(broadcast(offsets), col("__pid") === col("__opid"))
-      .withColumn(name, col("__off") + col("__local"))
-      .drop("__pid", "__opid", "__local", "__off")
-  }
-
-  /** Keyed two-level numbering at GROUP grain — [[contiguousId]] lifted
-    * from rows to distinct keys (the r13-verdict fix for data-sized
-    * renumbering): assign every row of an already-DISTINCT key table an
-    * order-consistent long id with NO zero-key window anywhere.
-    * Range-partition on the keys (each distinct key lands in exactly
-    * one partition), `dense_rank` WITHIN partitions (keyed window), and
-    * add per-partition offsets prefix-summed on the DRIVER from the
-    * P-bounded (pid, count) rollup — one row per shuffle partition, the
-    * repo's sanctioned bounded side-data shape — then broadcast back.
-    * Ids are 1-based, unique per key, ascending in key order across
-    * partitions (order-consistent; NOT dense across partitions — dense
-    * within, offset by exact partition counts, so in fact dense
-    * globally too, but callers must only rely on equality + order).
-    * The input is pinned (lazy localCheckpoint) so the range sampler,
-    * the offsets rollup, and the downstream join all read ONE
-    * materialization. At 100 TB this is the only safe renumber shape:
-    * the biggest single-partition working set is |keys|/P, never
-    * |keys|.
-    */
-  def keyedGroupRank(distinctKeys: DataFrame, keys: Seq[String], out: String): DataFrame = {
-    val spark = distinctKeys.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val ranked = distinctKeys
-      .repartitionByRange(parts, keys.map(col): _*)
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .withColumn("__lr", dense_rank().over(
-        Window.partitionBy("__pid").orderBy(keys.map(col): _*)).cast("long"))
-      .localCheckpoint(false)
-    // P-bounded side data: one (pid, max local rank) row per partition
-    val counts = ranked.groupBy("__pid").agg(max("__lr").as("__cnt"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offs = counts.map { case (p, c) => val o = acc; acc += c; (p, o) }.toSeq
-    import spark.implicits._
-    val offDf = offs.toDF("__opid", "__off")
-    ranked.join(broadcast(offDf), col("__pid") === col("__opid"))
-      .withColumn(out, col("__off") + col("__lr"))
-      .drop("__pid", "__opid", "__lr", "__off")
-  }
-
   /** EQUALITY-ONLY keyed numbering — the cheapest two-level form, for
     * renumbers that never consume rank ORDER (q329/q339's prefix
     * doubling tests only pair equality): bucket each distinct key row
@@ -154,7 +90,7 @@ object Clean {
     * `bucket · 2⁴² + local_rank`. Equal keys hash to one bucket and get
     * one local rank, so equal ⇔ equal-id; different buckets occupy
     * disjoint id ranges, so the map is injective with NO range-sampling
-    * pass and NO driver action ([[keyedGroupRank]] pays both to buy
+    * pass and NO driver action ([[keyedPrefixRank]] pays both to buy
     * order-consistency — use it when downstream sorts by the id).
     * Capacity: bucket < 2²¹, per-bucket ranks < 2⁴² — at 100 TB a
     * partition would hold trillions of distinct keys before overflow.
@@ -168,9 +104,9 @@ object Clean {
       .drop("__b")
   }
 
-  /** Keyed global ROW numbering + running sum — [[keyedGroupRank]]'s
-    * sibling for rank/cumsum workloads (Zipf tables, quantile scoring)
-    * whose input GROWS with the data (vocab-, user-sized): global
+  /** Keyed global ROW numbering + running sum — [[hashBucketRank]]'s
+    * order-consistent sibling for rank/cumsum workloads (Zipf tables,
+    * quantile scoring) whose input GROWS with the data (vocab-, user-sized): global
     * `row_number` (and optionally a prefix sum of one column) over a
     * total order, with NO zero-key window. Requires the sort columns to
     * be a UNIQUE total order (callers add a tiebreak key — same

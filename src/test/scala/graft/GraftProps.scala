@@ -148,15 +148,6 @@ object GraftProps extends Properties("graft") {
       }
     }
 
-  property("contiguousId: dense 0-based unique ids at any partitioning") =
-    forAll(Gen.listOfN(9, Gen.choose(0, 99)), Gen.choose(1, 5)) { (xs, parts) =>
-      xs.nonEmpty ==> {
-        val ids = Clean.contiguousId(xs.toDF("v").repartition(parts), "id")
-          .select("id").collect().map(_.getLong(0)).sorted.toSeq
-        ids == (0L until xs.length.toLong)
-      }
-    }
-
   property("classifier_score fused kernel == HOF formulation for arbitrary text") =
     forAll(Gen.listOfN(5, text)) { texts =>
       import graft.functions.PortableHashKernels.{ClsA, ClsB}

@@ -69,6 +69,25 @@ class InspectSpec extends SparkSpec {
     } finally spark.conf.set(aqe, prev)
   }
 
+  test("a warm build of a shared-rollup query launches only its footer-inference jobs") {
+    // one query per operator file whose rollup localCheckpoints were deleted: under AQE a
+    // checkpoint runs its input's shuffle stages while the query is built, so putting one
+    // back adds a construction job here; the footer reads are Tables.load's schema inference
+    val qs = Seq("q282_curriculum_mixture", "q345_label_propagation", "q369_cusum_drift",
+      "q357_shuffle_partition_advisor", "q359_repetition_budget", "q333_intrinsic_dim",
+      "q363_entropy_rate")
+    val warm = qs.map { q =>
+      def build() = Inspect.collect(spark)(SparkEntry.queries(q)(spark, d))._2
+      build()
+      q -> build()
+    }
+    val extra = warm.collect {
+      case (q, c) if c.jobs != c.stages.size ||
+          !c.stages.forall(_.name.startsWith("parquet at Tables.scala")) => q -> c.stages.map(_.name)
+    }
+    assert(extra.isEmpty, extra)
+  }
+
   test("a warm run of q147 and q56 launches no job that rebuilds what the first run holds") {
     def jobs(q: String) = Inspect.collect(spark)(SparkEntry.queries(q)(spark, d).collect())._2.jobs
     val warm = Seq("q147_streaming_poc", "q56_dedup_clusters").map { q => jobs(q); q -> jobs(q) }
@@ -76,5 +95,13 @@ class InspectSpec extends SparkSpec {
     // bar_stock and cocktails inside its first micro-batch, and q56 ran a potential job
     // and 3 min-label rounds instead of 2
     assert(warm == Seq("q147_streaming_poc" -> 7, "q56_dedup_clusters" -> 16), warm)
+  }
+
+  test("repeated q147 runs leave no memory-sink view in the session catalog") {
+    val rows = (1 to 3).map(_ => SparkEntry.queries("q147_streaming_poc")(spark, d).count())
+    // the resolved result keeps its rows after its view is dropped
+    assert(rows.forall(_ > 0) && rows.distinct.size == 1, rows)
+    val sinks = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("poc_stream_"))
+    assert(sinks.isEmpty, sinks.toSeq)
   }
 }

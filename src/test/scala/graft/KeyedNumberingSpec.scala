@@ -19,23 +19,6 @@ class KeyedNumberingSpec extends SparkSpec {
         if w.partitionSpec.isEmpty => w
     }.size
 
-  test("keyedGroupRank: dense, order-consistent ids equal to the global dense_rank") {
-    // 777 distinct keys, deliberately unsorted and multi-partition
-    val keys = scala.util.Random.shuffle((1 to 777).map(i => s"k%04d".format(i * 7 % 1000)))
-      .distinct.toDF("k").repartition(13)
-    val got = Clean.keyedGroupRank(keys, Seq("k"), "id")
-    assert(zeroKeyWindows(got) == 0, "keyedGroupRank must not plan a zero-key window")
-    val rows = got.collect().map(r => (r.getString(0), r.getLong(1)))
-    val sortedByKey = rows.sortBy(_._1).map(_._2)
-    assert(sortedByKey.toSeq == (1L to rows.length).toSeq,
-      "ids must be dense 1..N in key order")
-  }
-
-  test("keyedGroupRank on an empty input yields an empty result") {
-    val empty = Seq.empty[String].toDF("k")
-    assert(Clean.keyedGroupRank(empty, Seq("k"), "id").count() == 0)
-  }
-
   test("keyedPrefixRank: rank/cumsum/total equal the global-window definition") {
     val data = (1 to 500).map(i => (s"t${i % 97}", (i * 31 % 113).toLong + 1))
       .groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2).sum) }.toSeq

@@ -118,7 +118,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("every zero-key window is allowlisted, and above an aggregate unless its bound says '!'") {
     // the mechanical form of the two-level numbering convention: a data-GROWING
-    // renumber must use Clean.keyedGroupRank, which leaves no window at all
+    // renumber must use Clean.keyedPrefixRank or Clean.hashBucketRank, which leave no
+    // zero-key window at all
     val allowed = PlanAudit.zeroKeyWindowAllowlist
     val offenders = shapes.collect {
       case (n, s) if s.keys.exists(_.startsWith("window zero-key")) &&

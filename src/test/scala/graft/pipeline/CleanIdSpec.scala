@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Surrogate-key generators: the fact-scale keyedOrderedId must be
   * bit-identical to the global-window orderedId (that equality is what
   * lets the pipeline swap one for the other without touching q131's
-  * oracle), and contiguousId must stay in the DataFrame layer — dense
-  * 0-based ids with no RDD round-trip in the plan.
+  * oracle).
   */
 class CleanIdSpec extends SparkSpec {
 
@@ -64,18 +63,5 @@ class CleanIdSpec extends SparkSpec {
       case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => true
       case _ => false
     }))
-  }
-
-  test("contiguousId: dense 0-based unique ids, no RDD round-trip in the plan") {
-    val df = fixture
-    val out = Clean.contiguousId(df, "id")
-    val ids = out.select("id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids == (0L until 7L))
-    // the old implementation dropped to RDD zipWithIndex, which shows up
-    // as an ExistingRDD scan (deserialize/reserialize of every row)
-    val plan = out.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("ExistingRDD") && !plan.contains("LogicalRDD"))
-    // original column order preserved, id appended
-    assert(out.columns.toSeq == Seq("k", "d", "idx", "id"))
   }
 }
