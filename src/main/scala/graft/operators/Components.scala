@@ -97,6 +97,25 @@ object Components {
     labels
   }
 
+  /** `rounds` synchronous min-label rounds with no convergence check
+    * (q129's, which its oracle replays as SQL self-joins), on
+    * [[connectedComponents]]' round: the edges plus a self-loop per vertex
+    * (the closed neighbourhood), joined once to the labels and reduced
+    * with `min`. A round reads the previous labels once, so the rounds
+    * stack into one linear plan with no per-round checkpoint, and
+    * exchange reuse shuffles the edges once. No contraction: a fixed-round
+    * label depends on hop distances.
+    * @return (id, component) where component = min id within `rounds` hops */
+  def minLabelRounds(vertices: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
+    val closed = edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .unionByName(vertices.select(col("id").as("src"), col("id").as("dst")))
+    (1 to rounds).foldLeft(vertices.select(col("id"), col("id").as("component"))) {
+      (labels, _) => closed.join(labels, col("dst") === col("id"))
+        .groupBy(col("src").as("id")).agg(min("component").as("component"))
+    }
+  }
+
   /** Large-star / small-star connected components (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) — the
     * 100-TB CC algorithm, implemented beside the min-label loop above
@@ -143,7 +162,10 @@ object Components {
     * exposed because the forest IS the incremental-CC state: it has the
     * same components as the input graph in O(components) edges, so
     * day-2 edges union onto it and re-converge in O(1) rounds instead
-    * of re-running over the full history (q304's contract). */
+    * of re-running over the full history (q304's contract). The edges
+    * are contracted to partition-local stars first, as in
+    * [[connectedComponents]]; the converged forest is unique, so only
+    * the round count changes. */
   def starForest(edges: DataFrame, maxIters: Int = 40): (DataFrame, Int) = {
 
     def largeStar(e: DataFrame): DataFrame = {
@@ -175,8 +197,10 @@ object Components {
       (r.getLong(0), r.getDecimal(1), r.getDecimal(2))
     }
 
-    var e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
+    val longs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    var e = edges.where(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src"), col("dst")).as(longs)
+      .mapPartitions(localStars)(longs).toDF("src", "dst").distinct()
       .localCheckpoint(eager = false)
     var curPot = pot(e)
     var rounds = 0

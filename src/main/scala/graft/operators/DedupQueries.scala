@@ -2005,9 +2005,14 @@ object DedupQueries {
         val among = edK
           .join(alive, Seq("k", "u"), "left_semi")
           .join(alive.withColumnRenamed("u", "v"), Seq("k", "v"), "left_semi")
+        // a round reads `alive` twice, so the checkpoint keeps the plan from doubling per
+        // round. Tried without it, reading `alive` once (a vertex with fewer than k live
+        // neighbours never regains them, so the u-side semi-join is redundant): identical
+        // rows and 25 jobs a run instead of 35, but exec rose from 0.16-0.34 s to 1.1-1.7 s
+        // because the report below reads the six-round chain four times
         alive = among.groupBy("k", "u").agg(count(lit(1)).as("c"))
           .filter(col("c") >= col("k")).select("k", "u")
-          .localCheckpoint(false) // bounded-round lineage cut, q56's pattern
+          .localCheckpoint(false)
         if (t == 5) a5 = alive
       }
       val coreEdges = edK

@@ -342,8 +342,9 @@ object ModelPrepQueries {
   // oracle expressible (six unrolled self-joins in SQL) and the result
   // partition-independent; the spec asserts a 7th round is a fixpoint at
   // test scale, and q56 is the convergence-checked production loop for
-  // adversarial diameters. Edges are skinny (id,id) rows; each round is
-  // one keyed join + agg, lineage cut per round.
+  // adversarial diameters. Edges are skinny (id,id) rows; the rounds run
+  // on `Components.minLabelRounds`, one keyed join + agg each, stacked
+  // into one linear plan.
   private[graft] val CanonRounds = 6
 
   /** The CTE chain ending in `l{CanonRounds}(v, lbl)` — the unrolled
@@ -371,29 +372,12 @@ object ModelPrepQueries {
        |SELECT v AS doc_id, lbl AS cluster_id, (v = lbl) AS is_canonical, cluster_size
        |FROM l$CanonRounds JOIN cs ON l$CanonRounds.lbl = cs.cluster_id""".stripMargin
 
-  /** One synchronous min-label round: every node takes the min of its own
-    * and its neighbors' previous-round labels. Public for the fixpoint
-    * spec. */
-  def canonRound(edges: DataFrame, prev: DataFrame): DataFrame = {
-    val nb = edges.join(prev.select(col("v").as("u"), col("lbl").as("nlbl")), Seq("u"))
-      .groupBy("v").agg(min("nlbl").as("mn"))
-    prev.join(nb, Seq("v"), "left")
-      .select(col("v"), least(col("lbl"), coalesce(col("mn"), col("lbl"))).as("lbl"))
-  }
-
   /** Labels after `rounds` synchronous rounds over the portable-LSH pair
     * graph. */
-  def canonLabels(s: SparkSession, d: String, rounds: Int): DataFrame = {
-    val pairs = DedupQueries.portablePairs(s, d)
-    val edges = pairs.select(col("ia").as("v"), col("ib").as("u"))
-      .unionByName(pairs.select(col("ib").as("v"), col("ia").as("u")))
-      .localCheckpoint(false) // reused every round; cut the LSH lineage once
-    var lab = Tables.documents(s, d)
-      .select(col("doc_id").as("v"), col("doc_id").as("lbl"))
-    for (_ <- 1 to rounds)
-      lab = canonRound(edges, lab).localCheckpoint(false)
-    lab
-  }
+  def canonLabels(s: SparkSession, d: String, rounds: Int): DataFrame =
+    Components.minLabelRounds(Tables.documents(s, d).select(col("doc_id").as("id")),
+      DedupQueries.portablePairs(s, d).select(col("ia").as("src"), col("ib").as("dst")),
+      rounds).select(col("id").as("v"), col("component").as("lbl"))
 
   /** The canonical labels as a stored artifact (r15 optimization round,
     * the dedup_clusters/suffranks pattern): SIX queries ran the full

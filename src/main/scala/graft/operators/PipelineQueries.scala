@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.QueryDef
 import graft.pipeline.Fixtures
 import graft.sources.ArtifactStore
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** The reference's own workload, end to end: S1-S4+S6 source matrix
@@ -224,14 +225,9 @@ object PipelineQueries {
         // the memory sink, not the staged files, holds the result —
         // the per-invocation feed copies can go now (bench sweeps would
         // otherwise accumulate them in tmpdir). INSIDE the finally so a
-        // failed streaming lifecycle doesn't strand its copy; best-effort
-        // so a deletion error can't mask the original exception.
-        try {
-          val walk = JFiles.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => JFiles.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: Throwable => () }
+        // failed streaming lifecycle doesn't strand its copy; quiet so a
+        // deletion error can't mask the original exception.
+        FileUtils.deleteQuietly(dir.toFile)
       }
     })
 

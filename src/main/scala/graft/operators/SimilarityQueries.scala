@@ -183,25 +183,28 @@ object SimilarityQueries {
 
   /** Unrolled DuckDB twin of [[trainCentroids]]: CTEs ${p}cent0 ..
     * ${p}cent$iters over `src(vec_id, v BIGINT[])`; final centroids =
-    * ${p}cent$iters(c_id, c BIGINT[]). */
+    * ${p}cent$iters(c_id, c BIGINT[]). Every head is MATERIALIZED:
+    * ${p}cent$t reads ${p}cent${t-1} twice, so an inlining DuckDB would
+    * re-expand every earlier round inside each later one (the ANN/PQ
+    * oracles ran out of memory on the sf0.001 tables). */
   private def kmeansCtes(p: String, src: String, k: Int, iters: Int): String = {
-    val init = s"${p}cent0 AS (SELECT vec_id AS c_id, v AS c FROM $src WHERE vec_id < $k)"
+    val init = s"${p}cent0 AS MATERIALIZED (SELECT vec_id AS c_id, v AS c FROM $src WHERE vec_id < $k)"
     val steps = (1 to iters).map { t =>
-      s"""${p}asg$t AS (
+      s"""${p}asg$t AS MATERIALIZED (
          |  SELECT vec_id, c_id FROM (
          |    SELECT v.vec_id, c.c_id,
          |           ROW_NUMBER() OVER (PARTITION BY v.vec_id
          |             ORDER BY list_cosine_similarity(CAST(v.v AS DOUBLE[]),
          |                        CAST(c.c AS DOUBLE[])) DESC, c.c_id DESC) AS rn
          |    FROM $src v CROSS JOIN ${p}cent${t - 1} c) WHERE rn = 1),
-         |${p}sum$t AS (
+         |${p}sum$t AS MATERIALIZED (
          |  SELECT c_id, dim, CAST(SUM(uv) AS BIGINT) AS sv FROM (
          |    SELECT a.c_id AS c_id,
          |           UNNEST([{'dim': i, 'uv': v[i]} FOR i IN range(1, len(v) + 1)],
          |                  recursive := true)
          |    FROM ${p}asg$t a JOIN $src USING (vec_id))
          |  GROUP BY c_id, dim),
-         |${p}cent$t AS (
+         |${p}cent$t AS MATERIALIZED (
          |  SELECT o.c_id, COALESCE(n.c, o.c) AS c
          |  FROM ${p}cent${t - 1} o LEFT JOIN (
          |    SELECT c_id, list(sv ORDER BY dim) AS c FROM ${p}sum$t GROUP BY c_id) n

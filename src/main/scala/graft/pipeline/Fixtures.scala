@@ -4,6 +4,8 @@ import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
+import org.apache.commons.io.FileUtils
+
 /** Deterministic offline fixtures mirroring the reference's four sources
   * (FIXTURES.md F1-F4): dirty stock values, the `coper mug` typo, three
   * sales formats (Hungarian-header CSV, headerless TSV, US-date CSV — all
@@ -108,21 +110,9 @@ object Fixtures {
         // whenever the move did NOT succeed (lost race, write failure),
         // the private build dir still exists — remove it so crashed or
         // racing runs don't accumulate fixture copies in tmpdir.
-        // Best-effort on purpose: a cleanup failure must not mask the
-        // original exception (and the walk stream must close either way)
-        if (Files.exists(build))
-          try {
-            val walk = Files.walk(build)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => Files.deleteIfExists(p))
-            finally walk.close()
-          } catch {
-            // NonFatal, not just IOException: the walk stream wraps I/O
-            // failures mid-traversal in UncheckedIOException (a
-            // RuntimeException), which must equally not mask the
-            // original build/move exception
-            case scala.util.control.NonFatal(_) => ()
-          }
+        // Quiet on purpose: a cleanup failure must not mask the original
+        // exception
+        FileUtils.deleteQuietly(build.toFile)
     }
     Map("barStock" -> "bar_stock.csv", "budapest" -> "budapest.csv.gz",
       "london" -> "london_transactions.csv.gz", "ny" -> "ny.csv.gz",
@@ -135,10 +125,7 @@ object Fixtures {
     * (e.g. q70's poc_analysis parquet), which rules out eager deletion
     * inside the fn. Bounded: one hook per pipeline invocation. */
   def deleteOnExit(dir: Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: Throwable => () }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => FileUtils.deleteQuietly(dir.toFile)))
 
   def pipeline(dir: Path, paths: Map[String, String]): CocktailPipeline =
     new CocktailPipeline(

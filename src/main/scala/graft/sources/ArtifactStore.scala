@@ -89,12 +89,7 @@ object ArtifactStore {
       System.getProperty("java.io.tmpdir"),
       s"graft-artifacts-${ProcessHandle.current().pid()}")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        val walk = java.nio.file.Files.walk(wh)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case _: Throwable => () }))
+      org.apache.commons.io.FileUtils.deleteQuietly(wh.toFile)))
     wh
   }
 

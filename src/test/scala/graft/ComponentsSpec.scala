@@ -46,14 +46,13 @@ class ComponentsSpec extends SparkSpec {
   test("a loop that does not converge throws instead of returning split labels") {
     val vertices = (1 to 12).map(_.toLong).toDF("id")
     val path = (1 until 12).map(i => (i.toLong, i.toLong + 1))
-    val edges = path.toDF("src", "dst")
     // dealt round-robin, no partition holds two adjacent edges, so
     // contraction leaves the path 11 hops deep
     val minLabel = intercept[IllegalStateException](
       Components.connectedComponents(vertices, dealt(path, 4), maxIters = 2))
     assert(minLabel.getMessage.contains("did NOT converge in 2 iterations"))
     val star = intercept[IllegalStateException](
-      Components.connectedComponentsStar(vertices, edges, maxIters = 1))
+      Components.connectedComponentsStar(vertices, dealt(path, 4), maxIters = 1))
     assert(star.getMessage.contains("did NOT converge in 1 alternation rounds"))
   }
 
@@ -65,6 +64,37 @@ class ComponentsSpec extends SparkSpec {
     val got = Components.connectedComponents(vertices, dealt(path, 1), maxIters = 2)
       .as[(Long, Long)].collect().toMap
     assert(got == expectedLabels(12, path))
+  }
+
+  test("contraction: a path held by one partition is a star forest after one star round") {
+    // the partition's union-find hooks every vertex onto 1, so the first alternation
+    // round changes nothing and confirms the fixpoint
+    val path = (1 until 12).map(i => (i.toLong, i.toLong + 1))
+    val (forest, rounds) = Components.starForest(dealt(path, 1))
+    assert(rounds == 1)
+    assert(forest.as[(Long, Long)].collect().toSet == (2L to 12L).map(_ -> 1L).toSet)
+  }
+
+  /** Min id within `k` hops of each vertex, by a driver-side breadth-first walk. */
+  private def minWithinHops(n: Int, es: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
+    val nb = (es ++ es.map(_.swap)).groupMap(_._1)(_._2).withDefaultValue(Seq.empty)
+    (1L to n).map { v =>
+      val seen = (1 to k).foldLeft(Set(v))((s, _) => s ++ s.flatMap(nb))
+      v -> seen.min
+    }.toMap
+  }
+
+  test("k fixed min-label rounds give the min id within k hops") {
+    val cases: Seq[(String, Int, Seq[(Long, Long)])] = Seq(
+      ("path", 16, (1 until 16).map(i => (i.toLong, i + 1L))),
+      ("cycle", 12, (1 until 12).map(i => (i.toLong, i + 1L)) :+ ((12L, 1L))),
+      ("star at max id", 10, (1 until 10).map(i => (10L, i.toLong))))
+    for ((name, n, es) <- cases; parts <- Seq(4, 7); k <- 1 to 3) {
+      val vertices = (1 to n).map(_.toLong).toDF("id")
+      val got = Components.minLabelRounds(vertices, dealt(es, parts), k)
+        .as[(Long, Long)].collect().toMap
+      assert(got == minWithinHops(n, es, k), s"$name over $parts partitions, $k rounds")
+    }
   }
 
   test("contraction keeps the labels of adversarial graphs spread over 4+ partitions") {

@@ -69,13 +69,14 @@ class InspectSpec extends SparkSpec {
     } finally spark.conf.set(aqe, prev)
   }
 
-  test("a warm build of a shared-rollup query launches only its footer-inference jobs") {
-    // one query per operator file whose rollup localCheckpoints were deleted: under AQE a
-    // checkpoint runs its input's shuffle stages while the query is built, so putting one
-    // back adds a construction job here; the footer reads are Tables.load's schema inference
+  test("a warm build of a checkpoint-free query launches only its footer-inference jobs") {
+    // one query per operator file whose rollup localCheckpoints were deleted, and q129,
+    // whose min-label rounds lost theirs: under AQE a checkpoint runs its input's shuffle
+    // stages while the query is built, so putting one back adds a construction job here;
+    // the footer reads are Tables.load's schema inference
     val qs = Seq("q282_curriculum_mixture", "q345_label_propagation", "q369_cusum_drift",
       "q357_shuffle_partition_advisor", "q359_repetition_budget", "q333_intrinsic_dim",
-      "q363_entropy_rate")
+      "q363_entropy_rate", "q129_cluster_canonical")
     val warm = qs.map { q =>
       def build() = Inspect.collect(spark)(SparkEntry.queries(q)(spark, d))._2
       build()

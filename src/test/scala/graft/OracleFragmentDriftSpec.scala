@@ -241,6 +241,16 @@ class OracleFragmentDriftSpec extends AnyFunSpec with Matchers {
       }
     }
 
+    it("every head of the k-means chain is materialized") {
+      // cent<t> reads cent<t-1> twice: an inlined chain re-expands every earlier
+      // round inside each later one and runs DuckDB out of memory
+      val heads = """(?m)^(ivf(?:cent|asg|sum)\d+) AS (\w*)""".r
+        .findAllMatchIn(graft.operators.SimilarityQueries.ivfChainCtes)
+        .map(m => m.group(1) -> m.group(2)).toSeq
+      heads.map(_._1) should contain allOf ("ivfcent0", "ivfasg1", "ivfsum1", "ivfcent1")
+      heads.filter(_._2 != "MATERIALIZED") shouldBe empty
+    }
+
     it("every decontamination consumer embeds the canonical eval-gram chain verbatim") {
       val frag = graft.operators.CurationQueries.decontamCtes
       val consumers = sqlByName.filter(_._2.contains("FROM g JOIN ev USING (gram)"))
