@@ -2008,8 +2008,9 @@ object DedupQueries {
         // a round reads `alive` twice, so the checkpoint keeps the plan from doubling per
         // round. Tried without it, reading `alive` once (a vertex with fewer than k live
         // neighbours never regains them, so the u-side semi-join is redundant): identical
-        // rows and 25 jobs a run instead of 35, but exec rose from 0.16-0.34 s to 1.1-1.7 s
-        // because the report below reads the six-round chain four times
+        // rows and 25 jobs a run instead of 35, but exec rose from 0.16-0.39 s to 1.0-2.0 s
+        // because the report below reads the six-round chain four times, and
+        // construct+plan+exec medians from 1.64/1.75 s to 1.80/2.06 s (sf0.01/sf0.1)
         alive = among.groupBy("k", "u").agg(count(lit(1)).as("c"))
           .filter(col("c") >= col("k")).select("k", "u")
           .localCheckpoint(false)
