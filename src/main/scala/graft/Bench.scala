@@ -86,8 +86,13 @@ object Bench {
       if (!ok) System.err.println(s"[bench] $name FAILED")
       if (ok) dt else -1.0 // a failure must not masquerade as a fast success
     }
-    val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      run(fn) // warm-up (codegen compilation, parquet footers, JIT)
+    val byName = selected.toSeq.sortBy(_._1)
+    // warm EVERY selected query once before timing any (codegen
+    // compilation, parquet footers, JIT): warming each just before its
+    // own runs left the first name in the sort timing a JVM that had
+    // warmed nothing else, so q17, the usual control, read noisiest
+    byName.foreach { case (_, fn) => run(fn) }
+    val firstPass = byName.map { case (name, fn) =>
       // min of three timed runs: GC/JIT/system noise only ever ADDS
       // time, so the minimum is the better steady-state estimate — three
       // because a single host-level stall has been observed outlasting a
