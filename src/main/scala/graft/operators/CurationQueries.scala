@@ -2195,8 +2195,7 @@ object CurationQueries {
             size(tokens(coalesce(textCol, lit("")))).cast("long"),
             lit(1024L)).as("c"))
           val v0 = n.withColumn("v", greatest(col("c"), lit(16L)) - 1L)
-          Seq(1, 2, 4, 8).foldLeft(v0)((x, k) =>
-              x.withColumn("v", expr(s"v | shiftright(v, $k)")))
+          graft.functions.PortableHll.smear(v0, "v")
             .withColumn("bucket", col("v") + 1L)
             .groupBy("bucket").agg(count(lit(1)).as("c"))
         }

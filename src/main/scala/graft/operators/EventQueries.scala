@@ -531,8 +531,7 @@ object EventQueries {
         .select(col("event_type"), least(col("gap"), lit(1048576L)).as("gap"))
       val v0 = c.withColumn("v",
         when(col("gap") <= 1, col("gap")).otherwise(col("gap") - 1))
-      val b = Seq(1, 2, 4, 8, 16).foldLeft(v0)((df, k) =>
-        df.withColumn("v", expr(s"v | shiftright(v, $k)")))
+      val b = graft.functions.PortableHll.smear(v0, "v")
         .select(col("event_type"),
           when(col("gap") <= 1, col("gap")).otherwise(col("v") + 1)
             .as("bucket"))
@@ -606,8 +605,7 @@ object EventQueries {
       val w0 = lat.withColumn("v",
         when(col("gap").isNull || col("gap") <= 1, col("gap"))
           .otherwise(col("gap") - 1))
-      val b = Seq(1, 2, 4, 8, 16).foldLeft(w0)((df, k) =>
-        df.withColumn("v", expr(s"v | shiftright(v, $k)")))
+      val b = graft.functions.PortableHll.smear(w0, "v")
         .select(when(col("gap").isNull, lit(-1L))
           .when(col("gap") <= 1, col("gap"))
           .otherwise(col("v") + 1).as("bucket"))

@@ -13,10 +13,8 @@ object ExtensionQueries {
 
   /** Approximate/sketch aggregates, PORTABLE (the round-11 verdict's
     * no_oracle shrink): per-priority HLL distinct-customer estimate on
-    * the q244 hash-matched kernel (quadratic mix → two affine streams →
-    * 128 buckets → power-of-two-framed rank → integer harmonic
-    * estimator with the linear-counting fallback — identical literals
-    * in both engines, so the driver hash-checks the ESTIMATE, not just
+    * [[graft.functions.PortableHll]] (streams 17/18, base hash
+    * pmod(o_custkey, P); the driver hash-checks the ESTIMATE, not just
     * rows), plus an equi-width-histogram approximate median (a $100
     * bucket rollup; the median bucket's midpoint is the estimate —
     * error bounded by the bucket width, the classic fixed-size
@@ -29,45 +27,18 @@ object ExtensionQueries {
     * exchange, which is the whole point at 100 TB.
     */
   val q25 = {
-    import graft.functions.PortableHashKernels.{P, a, b}
-    val (a1, b1, a2, b2) = (a(17), b(17), a(18), b(18))
-    val lcVals = (1 to 128).map(v =>
-      s"($v, ${math.round(128.0 * math.log(128.0 / v))})").mkString(", ")
+    import graft.functions.PortableHashKernels.P
+    import graft.functions.PortableHll
+    val streams = PortableHll.Streams(17, 18)
     QueryDef.oracle("q25_sketch_aggs",
       s"""WITH h AS (SELECT o_orderpriority AS pri,
          |             ((CAST(o_custkey AS BIGINT) % $P) + $P) % $P AS th,
          |             CAST(round(o_totalprice * 100) AS BIGINT) AS cents
          |           FROM orders),
-         |mixed AS (SELECT pri, (th * th + 3 * th + 7) % $P AS tm FROM h),
-         |wd AS (SELECT pri, (tm * $a1 + $b1) % $P AS h1,
-         |              (tm * $a2 + $b2) % $P AS h2 FROM mixed),
-         |b0 AS (SELECT pri, h2 % 128 AS bucket,
-         |         ((h1 * 8388608) // $P) * 8388608
-         |           + (h2 * 8388608) // $P AS w
-         |       FROM wd),
-         |m1 AS (SELECT pri, bucket, w | (w >> 1) AS w FROM b0),
-         |m2 AS (SELECT pri, bucket, w | (w >> 2) AS w FROM m1),
-         |m3 AS (SELECT pri, bucket, w | (w >> 4) AS w FROM m2),
-         |m4 AS (SELECT pri, bucket, w | (w >> 8) AS w FROM m3),
-         |m5 AS (SELECT pri, bucket, w | (w >> 16) AS w FROM m4),
-         |m6 AS (SELECT pri, bucket, w | (w >> 32) AS w FROM m5),
-         |r AS (SELECT pri, bucket,
-         |        MAX(47 - CAST(bit_count(w) AS BIGINT)) AS mx
-         |      FROM m6 GROUP BY 1, 2),
-         |z AS (SELECT pri,
-         |        CAST(128 - count(*) AS BIGINT) AS n_empty,
-         |        CAST(SUM(CAST(1 AS BIGINT) << CAST(47 - mx AS INTEGER))
-         |             + (128 - count(*)) * 140737488355328 AS BIGINT) AS zs
-         |      FROM r GROUP BY 1),
-         |raw AS (SELECT z.*,
-         |          CAST(CAST(715271 AS HUGEINT) * 16384 * 140737488355328
-         |               // zs // 1000000 AS BIGINT) AS raw_est
-         |        FROM z),
-         |est AS (SELECT r.pri,
-         |          CAST(CASE WHEN r.n_empty > 0 AND r.raw_est <= 320
-         |               THEN lc.lc_est ELSE r.raw_est END AS BIGINT) AS hll_custs
-         |        FROM raw r LEFT JOIN (VALUES $lcVals) AS lc(v, lc_est)
-         |          ON r.n_empty = lc.v),
+         |hll_in AS (SELECT pri, th FROM h),
+         |${PortableHll.registerCtes(streams)},
+         |r AS (SELECT pri, bucket, MAX(rho) AS mx FROM hll_rank GROUP BY 1, 2),
+         |${PortableHll.estimateCte("est", "r", Seq("pri"))},
          |hist AS (SELECT pri, cents // 10000 AS bkt,
          |                CAST(count(*) AS BIGINT) AS c
          |         FROM h GROUP BY 1, 2),
@@ -80,7 +51,7 @@ object ExtensionQueries {
          |               + 5000 AS BIGINT) AS approx_median_cents,
          |          CAST(MAX(n) AS BIGINT) AS n
          |        FROM cum GROUP BY 1)
-         |SELECT e.pri AS o_orderpriority, m.n, e.hll_custs,
+         |SELECT e.pri AS o_orderpriority, m.n, e.est AS hll_custs,
          |       m.approx_median_cents
          |FROM est e JOIN med m ON e.pri = m.pri""".stripMargin)(
       (s, d) => {
@@ -89,35 +60,10 @@ object ExtensionQueries {
           col("o_orderpriority").as("pri"),
           pmod(col("o_custkey").cast("long"), lit(P)).as("th"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))
-        val bw = h
-          .withColumn("tm", expr(s"(th * th + 3L * th + 7L) % ${P}L"))
-          .withColumn("h1", expr(s"(tm * ${a1}L + ${b1}L) % ${P}L"))
-          .withColumn("h2", expr(s"(tm * ${a2}L + ${b2}L) % ${P}L"))
-          .withColumn("bucket", expr("h2 % 128L"))
-          .withColumn("w", expr(
-            s"((h1 * 8388608L) div ${P}L) * 8388608L" +
-              s" + (h2 * 8388608L) div ${P}L"))
-        val sm = Seq(1, 2, 4, 8, 16, 32).foldLeft(bw)((df, k) =>
-          df.withColumn("w", expr(s"w | shiftright(w, $k)")))
-        val r = sm
-          .withColumn("rho", expr("47L - CAST(bit_count(w) AS BIGINT)"))
+        val r = PortableHll.registers(h, streams)
           .groupBy("pri", "bucket").agg(max("rho").as("mx"))
-        val lcDf = s.createDataFrame((1 to 128).map(v =>
-          (v.toLong, math.round(128.0 * math.log(128.0 / v))))).toDF("v", "lc_est")
-        val est = r.groupBy("pri")
-          .agg((lit(128L) - count(lit(1))).as("n_empty"),
-            sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(47 - mx AS INT))"))
-              .as("zs_part"))
-          .withColumn("zs",
-            col("zs_part") + col("n_empty") * lit(140737488355328L))
-          .withColumn("raw_est", expr(
-            "CAST(CAST(715271 AS DECIMAL(38,0)) * 16384 * 140737488355328" +
-              " div zs div 1000000 AS BIGINT)"))
-          .join(broadcast(lcDf), col("n_empty") === col("v"), "left")
-          .withColumn("hll_custs", expr(
-            "CAST(CASE WHEN n_empty > 0 AND raw_est <= 320" +
-              " THEN lc_est ELSE raw_est END AS BIGINT)"))
-          .select("pri", "hll_custs")
+        val est = PortableHll.estimate(r, Seq("pri"))
+          .select(col("pri"), col("est").as("hll_custs"))
         val hist = h.groupBy(col("pri"), expr("cents div 10000").as("bkt"))
           .agg(count(lit(1)).as("c"))
         val cum = hist
@@ -740,25 +686,16 @@ object ExtensionQueries {
     * seconds) so the wire format is float-free; string columns ship
     * min/max as VARCHAR plus their total byte width (the CBO's
     * avg-row-width input). NDV is a PORTABLE 128-bucket HyperLogLog
-    * (q224's hash-matched integer-kernel family — bit-smear rank,
-    * algebraic empty-bucket fold, embedded linear-counting literal
-    * table), fed a canonical per-column value hash: pmod(key, P) for
-    * the three numeric kinds (injective — every key here is < P), the
-    * portable codepoint fold for strings. Two estimator refinements
-    * over q224, both forced by MEASURED bias on this input: (1) the
-    * base hash is passed through the quadratic mix (t² + 3t + 7) mod P
-    * before the affine streams — ANALYZE inputs are structured
-    * (epoch-second timestamps and surrogate keys are arithmetic
-    * progressions, and an affine map keeps an AP an AP, which skewed
-    * l_shipdate's estimate +65%); (2) the rank value is framed on an
-    * EXACT power of two — w = u1·2²³ + u2 with u_i = (h_i·2²³)//P —
-    * because q224's w = comb//128 is uniform on [0, P²/128), a range
-    * 0.868·2⁵³, which inflates every rank tail probability by
-    * 2⁵³·128/P² ≈ 1.153 (a systematic +15% NDV bias). The bucket comes
-    * from h2's LOW bits, the rank from h1⊕h2's HIGH-bit projections,
-    * so bucket and rank are decorrelated. With both fixes the observed
-    * per-column error across sf0.001–0.1 is centered within ±2.3σ of
-    * HLL theory. This replaces the round-10
+    * ([[graft.functions.PortableHll]], streams 13/14), fed a canonical
+    * per-column value hash: pmod(key, P) for the three numeric kinds
+    * (injective — every key here is < P), the portable codepoint fold
+    * for strings; a NULL value hashes to NULL and lands in the NULL
+    * bucket, which counts the column's nulls and occupies no register.
+    * The kernel's quadratic mix is what keeps structured columns
+    * honest (epoch-second timestamps and surrogate keys are arithmetic
+    * progressions; without it l_shipdate's estimate read +65%); the
+    * observed per-column error across sf0.001–0.1 is centered within
+    * ±2.3σ of HLL theory. This replaces the round-10
     * Expand defect: exact multi-NDV expanded the fact ~12× and shuffled
     * every high-cardinality column's full distinct domain (~11
     * data-sized shuffles at 100 TB); the sketch form is one scan into a
@@ -778,8 +715,9 @@ object ExtensionQueries {
     * estimator tail with a broadcast 128-row literal table.
     * HASH-MATCHED — DuckDB replays the estimator bit-for-bit. */
   val q244 = {
-    import graft.functions.PortableHashKernels.{P, a, b}
-    val (a1, b1, a2, b2) = (a(13), b(13), a(14), b(14))
+    import graft.functions.PortableHashKernels.P
+    import graft.functions.PortableHll
+    val streams = PortableHll.Streams(13, 14)
     // (name, kind): L = integral, D = double (cents key), T = timestamp
     // (epoch-seconds key), S = varchar (string min/max + byte width)
     val cols = Seq(
@@ -787,10 +725,6 @@ object ExtensionQueries {
       "l_linenumber" -> 'L', "l_quantity" -> 'D', "l_extendedprice" -> 'D',
       "l_discount" -> 'D', "l_tax" -> 'D', "l_returnflag" -> 'S',
       "l_linestatus" -> 'S', "l_shipdate" -> 'T')
-    // linear-counting table: V empty buckets -> round(m * ln(m / V)),
-    // computed HERE so both engines read identical integer literals
-    val lcVals = (1 to 128).map(v =>
-      s"($v, ${math.round(128.0 * math.log(128.0 / v))})").mkString(", ")
     def keySql(c: String, k: Char): String = k match {
       case 'L' => s"CAST($c AS BIGINT)"
       case 'D' => s"CAST(round($c * 100) AS BIGINT)"
@@ -818,56 +752,20 @@ object ExtensionQueries {
         s"SELECT '$c' AS col_name, CAST(NULL AS VARCHAR) AS min_s, CAST(NULL AS VARCHAR) AS max_s, CAST(NULL AS BIGINT) AS sum_bytes FROM ss"
     }
     QueryDef.oracle("q244_table_stats",
-      s"""WITH arms AS (${duckArms.mkString("\nUNION ALL\n")}),
-         |mixed AS (SELECT cn, kv,
-         |            (th * th + 3 * th + 7) % $P AS tm
-         |          FROM arms),
-         |wd AS (SELECT cn, kv,
-         |         (tm * $a1 + $b1) % $P AS h1,
-         |         (tm * $a2 + $b2) % $P AS h2
-         |       FROM mixed),
-         |b0 AS (SELECT cn, kv,
-         |         CASE WHEN h2 IS NULL THEN CAST(-1 AS BIGINT)
-         |              ELSE h2 % 128 END AS bucket,
-         |         ((h1 * 8388608) // $P) * 8388608
-         |           + (h2 * 8388608) // $P AS w
-         |       FROM wd),
-         |m1 AS (SELECT cn, kv, bucket, w | (w >> 1) AS w FROM b0),
-         |m2 AS (SELECT cn, kv, bucket, w | (w >> 2) AS w FROM m1),
-         |m3 AS (SELECT cn, kv, bucket, w | (w >> 4) AS w FROM m2),
-         |m4 AS (SELECT cn, kv, bucket, w | (w >> 8) AS w FROM m3),
-         |m5 AS (SELECT cn, kv, bucket, w | (w >> 16) AS w FROM m4),
-         |m6 AS (SELECT cn, kv, bucket, w | (w >> 32) AS w FROM m5),
-         |r AS (SELECT cn, bucket,
-         |        MAX(47 - CAST(bit_count(w) AS BIGINT)) AS mx,
+      s"""WITH hll_in AS (${duckArms.mkString("\nUNION ALL\n")}),
+         |${PortableHll.registerCtes(streams)},
+         |r AS (SELECT cn, bucket, MAX(rho) AS mx,
          |        CAST(count(*) AS BIGINT) AS cnt,
          |        min(kv) AS mnk, max(kv) AS mxk
-         |      FROM m6 GROUP BY 1, 2),
-         |z AS (SELECT cn,
-         |        CAST(SUM(cnt) AS BIGINT) AS n_rows,
-         |        CAST(COALESCE(SUM(CASE WHEN bucket = -1 THEN cnt END), 0)
-         |             AS BIGINT) AS n_nulls,
-         |        CAST(128 - COALESCE(SUM(CASE WHEN bucket >= 0 THEN 1 END), 0)
-         |             AS BIGINT) AS n_empty,
-         |        CAST(COALESCE(SUM(CASE WHEN bucket >= 0 THEN
-         |               CAST(1 AS BIGINT) << CAST(47 - mx AS INTEGER) END), 0)
-         |             + (128 - COALESCE(SUM(CASE WHEN bucket >= 0 THEN 1 END), 0))
-         |               * 140737488355328 AS BIGINT) AS zs,
-         |        CAST(min(mnk) AS BIGINT) AS min_k,
-         |        CAST(max(mxk) AS BIGINT) AS max_k
-         |      FROM r GROUP BY 1),
-         |raw AS (SELECT z.*,
-         |          CAST(CAST(715271 AS HUGEINT) * 16384 * 140737488355328
-         |               // zs // 1000000 AS BIGINT) AS raw_est
-         |        FROM z),
-         |est AS (SELECT r.*,
-         |          CAST(CASE WHEN r.n_empty > 0 AND r.raw_est <= 320
-         |               THEN lc.lc_est ELSE r.raw_est END AS BIGINT) AS ndv
-         |        FROM raw r LEFT JOIN (VALUES $lcVals) AS lc(v, lc_est)
-         |          ON r.n_empty = lc.v),
+         |      FROM hll_rank GROUP BY 1, 2),
+         |${PortableHll.estimateCte("est", "r", Seq("cn"),
+              "CAST(SUM(cnt) AS BIGINT) AS n_rows",
+              "CAST(COALESCE(SUM(CASE WHEN bucket IS NULL THEN cnt END), 0) AS BIGINT) AS n_nulls",
+              "CAST(min(mnk) AS BIGINT) AS min_k",
+              "CAST(max(mxk) AS BIGINT) AS max_k")},
          |ss AS (SELECT ${duckStrAggs.mkString(",\n  ")} FROM lineitem),
          |sarms AS (${duckStrArms.mkString("\nUNION ALL\n")})
-         |SELECT e.cn AS col_name, e.n_rows, e.n_nulls, e.ndv, e.min_k,
+         |SELECT e.cn AS col_name, e.n_rows, e.n_nulls, e.est AS ndv, e.min_k,
          |       e.max_k, s.min_s, s.max_s, s.sum_bytes
          |FROM est e JOIN sarms s ON e.cn = s.col_name""".stripMargin)(
       (s, d) => {
@@ -892,45 +790,16 @@ object ExtensionQueries {
         }
         val cnOf = s"array(${cols.map(c => s"'${c._1}'").mkString(", ")})[ci]"
         val ex = li.select(explode(array(arms: _*)).as("a")).select(col("a.*"))
-        val bw = ex
-          .withColumn("tm", expr(s"(th * th + 3L * th + 7L) % ${P}L"))
-          .withColumn("h1", expr(s"(tm * ${a1}L + ${b1}L) % ${P}L"))
-          .withColumn("h2", expr(s"(tm * ${a2}L + ${b2}L) % ${P}L"))
-          .withColumn("bucket",
-            expr("CASE WHEN h2 IS NULL THEN -1L ELSE h2 % 128L END"))
-          .withColumn("w", expr(
-            s"((h1 * 8388608L) div ${P}L) * 8388608L" +
-              s" + (h2 * 8388608L) div ${P}L"))
-        val sm = Seq(1, 2, 4, 8, 16, 32).foldLeft(bw)((df, k) =>
-          df.withColumn("w", expr(s"w | shiftright(w, $k)")))
-        val r = sm
-          .withColumn("rho", expr("47L - CAST(bit_count(w) AS BIGINT)"))
+        val r = PortableHll.registers(ex, streams)
           .groupBy("ci", "bucket")
           .agg(max("rho").as("mx"), count(lit(1)).as("cnt"),
             min("kv").as("mnk"), max("kv").as("mxk"))
-        val lc = (1 to 128).map(v =>
-          (v.toLong, math.round(128.0 * math.log(128.0 / v))))
-        val lcDf = s.createDataFrame(lc).toDF("v", "lc_est")
-        val est = r.groupBy("ci")
-          .agg(sum("cnt").cast("long").as("n_rows"),
-            coalesce(sum(when(col("bucket") === -1L, col("cnt"))), lit(0L))
-              .cast("long").as("n_nulls"),
-            (lit(128L) - coalesce(sum(when(col("bucket") >= 0L, lit(1L))), lit(0L)))
-              .cast("long").as("n_empty"),
-            coalesce(sum(when(col("bucket") >= 0L,
-              expr("shiftleft(CAST(1 AS BIGINT), CAST(47 - mx AS INT))"))), lit(0L))
-              .as("zs_part"),
-            min("mnk").cast("long").as("min_k"),
-            max("mxk").cast("long").as("max_k"))
-          .withColumn("zs",
-            col("zs_part") + col("n_empty") * lit(140737488355328L))
-          .withColumn("raw_est", expr(
-            "CAST(CAST(715271 AS DECIMAL(38,0)) * 16384 * 140737488355328" +
-              " div zs div 1000000 AS BIGINT)"))
-          .join(broadcast(lcDf), col("n_empty") === col("v"), "left")
-          .withColumn("ndv", expr(
-            "CAST(CASE WHEN n_empty > 0 AND raw_est <= 320" +
-              " THEN lc_est ELSE raw_est END AS BIGINT)"))
+        val est = PortableHll.estimate(r, Seq("ci"),
+          sum("cnt").cast("long").as("n_rows"),
+          coalesce(sum(when(col("bucket").isNull, col("cnt"))), lit(0L))
+            .cast("long").as("n_nulls"),
+          min("mnk").cast("long").as("min_k"),
+          max("mxk").cast("long").as("max_k"))
         // narrow string-stats pass: only the 2 VARCHAR columns are read
         // (column pruning), only a 1-row no-group aggregate — the string
         // buffers never touch the fact-sized rollup above
@@ -952,7 +821,7 @@ object ExtensionQueries {
         est.withColumn("cn", expr(cnOf))
           .join(broadcast(strDf), col("cn") === col("col_name"))
           .select(col("cn").as("col_name"), col("n_rows"), col("n_nulls"),
-            col("ndv"), col("min_k"), col("max_k"), col("min_s"),
+            col("est").as("ndv"), col("min_k"), col("max_k"), col("min_s"),
             col("max_s"), col("sum_bytes"))
       })
   }
@@ -1474,79 +1343,37 @@ object ExtensionQueries {
     * the mergeability proof, hash-checked by the driver on both
     * engines — not asserted, measured. Per-shard rows show each
     * shard's own (smaller) cardinality for scale context. Same
-    * estimator kernel as q244 (quadratic mix, pow2 rank frame,
-    * embedded linear-counting table). Scale shape: one scan →
+    * sketch as q244 ([[graft.functions.PortableHll]], streams 13/14).
+    * Scale shape: one scan →
     * (shard, bucket) rollup (map-side combined, ≤ 4×128 groups);
     * merge/monolithic are rollups OVER that tiny table. Output: 6
     * rows. HASH-MATCHED. */
   val q260 = {
-    import graft.functions.PortableHashKernels.{P, a, b}
-    val (a1, b1, a2, b2) = (a(13), b(13), a(14), b(14)) // q244's streams: same sketch family
-    val lcVals = (1 to 128).map(v =>
-      s"($v, ${math.round(128.0 * math.log(128.0 / v))})").mkString(", ")
-    // estimator tail over (grp, bucket, mx) — shared SQL fragment
-    def estSql(src: String): String =
-      s"""SELECT grp,
-         |  CAST(128 - count(*) AS BIGINT) AS n_empty,
-         |  CAST(SUM(CAST(1 AS BIGINT) << CAST(47 - mx AS INTEGER))
-         |       + (128 - count(*)) * 140737488355328 AS BIGINT) AS zs
-         |FROM $src GROUP BY 1""".stripMargin
+    import graft.functions.PortableHashKernels.P
+    import graft.functions.PortableHll
+    val streams = PortableHll.Streams(13, 14) // q244's streams: same sketch family
     QueryDef.oracle("q260_stats_merge_audit",
-      s"""WITH k AS (SELECT l_orderkey % 4 AS shard,
-         |             CAST(round(l_extendedprice * 100) AS BIGINT) AS kv
+      s"""WITH hll_in AS (SELECT l_orderkey % 4 AS shard,
+         |             ((CAST(round(l_extendedprice * 100) AS BIGINT) % $P) + $P) % $P AS th
          |           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-         |h AS (SELECT shard, ((kv % $P) + $P) % $P AS pm FROM k),
-         |mt AS (SELECT shard, (pm * pm + 3 * pm + 7) % $P AS tm FROM h),
-         |wd AS (SELECT shard, (tm * $a1 + $b1) % $P AS h1,
-         |              (tm * $a2 + $b2) % $P AS h2 FROM mt),
-         |b0 AS (SELECT shard, h2 % 128 AS bucket,
-         |         ((h1 * 8388608) // $P) * 8388608 + (h2 * 8388608) // $P AS w
-         |       FROM wd),
-         |m1 AS (SELECT shard, bucket, w | (w >> 1) AS w FROM b0),
-         |m2 AS (SELECT shard, bucket, w | (w >> 2) AS w FROM m1),
-         |m3 AS (SELECT shard, bucket, w | (w >> 4) AS w FROM m2),
-         |m4 AS (SELECT shard, bucket, w | (w >> 8) AS w FROM m3),
-         |m5 AS (SELECT shard, bucket, w | (w >> 16) AS w FROM m4),
-         |m6 AS (SELECT shard, bucket, w | (w >> 32) AS w FROM m5),
-         |sr AS (SELECT shard, bucket,
-         |         MAX(47 - CAST(bit_count(w) AS BIGINT)) AS mx
-         |       FROM m6 GROUP BY 1, 2),
-         |shz AS (SELECT 'shard_' || CAST(shard AS VARCHAR) AS grp, bucket, mx
-         |        FROM sr),
-         |mgz AS (SELECT 'merged' AS grp, bucket, MAX(mx) AS mx
-         |        FROM sr GROUP BY 2),
-         |mnz AS (SELECT 'monolithic' AS grp, bucket,
-         |          MAX(47 - CAST(bit_count(w) AS BIGINT)) AS mx
-         |        FROM m6 GROUP BY 2),
-         |allz AS (${estSql("shz")} UNION ALL ${estSql("mgz")}
-         |         UNION ALL ${estSql("mnz")}),
-         |raw AS (SELECT grp, n_empty,
-         |          CAST(CAST(715271 AS HUGEINT) * 16384 * 140737488355328
-         |               // zs // 1000000 AS BIGINT) AS raw_est
-         |        FROM allz)
-         |SELECT r.grp, r.n_empty,
-         |       CAST(CASE WHEN r.n_empty > 0 AND r.raw_est <= 320
-         |            THEN lc.lc_est ELSE r.raw_est END AS BIGINT) AS est_ndv
-         |FROM raw r LEFT JOIN (VALUES $lcVals) AS lc(v, lc_est)
-         |  ON r.n_empty = lc.v""".stripMargin)(
+         |${PortableHll.registerCtes(streams)},
+         |sr AS (SELECT shard, bucket, MAX(rho) AS mx FROM hll_rank GROUP BY 1, 2),
+         |allz AS (SELECT 'shard_' || CAST(shard AS VARCHAR) AS grp, bucket, mx
+         |         FROM sr
+         |         UNION ALL
+         |         SELECT 'merged' AS grp, bucket, MAX(mx) AS mx FROM sr GROUP BY 2
+         |         UNION ALL
+         |         SELECT 'monolithic' AS grp, bucket, MAX(rho) AS mx
+         |         FROM hll_rank GROUP BY 2),
+         |${PortableHll.estimateCte("est", "allz", Seq("grp"))}
+         |SELECT grp, n_empty, est AS est_ndv FROM est""".stripMargin)(
       (s, d) => {
         val k = Tables.lineitem(s, d)
           .filter(col("l_extendedprice").isNotNull)
           .select((col("l_orderkey") % 4).as("shard"),
-            round(col("l_extendedprice") * 100).cast("long").as("kv"))
-        val bw = k
-          .withColumn("pm", pmod(col("kv"), lit(P)))
-          .withColumn("tm", expr(s"(pm * pm + 3L * pm + 7L) % ${P}L"))
-          .withColumn("h1", expr(s"(tm * ${a1}L + ${b1}L) % ${P}L"))
-          .withColumn("h2", expr(s"(tm * ${a2}L + ${b2}L) % ${P}L"))
-          .withColumn("bucket", expr("h2 % 128L"))
-          .withColumn("w", expr(
-            s"((h1 * 8388608L) div ${P}L) * 8388608L + (h2 * 8388608L) div ${P}L"))
-        val sm = Seq(1, 2, 4, 8, 16, 32).foldLeft(bw)((df, i) =>
-          df.withColumn("w", expr(s"w | shiftright(w, $i)")))
-        val sr = sm
-          .withColumn("rho", expr("47L - CAST(bit_count(w) AS BIGINT)"))
-          .groupBy("shard", "bucket").agg(max("rho").as("mx")) // <=512 rows, three legs
+            pmod(round(col("l_extendedprice") * 100).cast("long"), lit(P)).as("th"))
+        val sm = PortableHll.registers(k, streams)
+        val sr = sm.groupBy("shard", "bucket").agg(max("rho").as("mx")) // <=512 rows, three legs
         val shz = sr.select(
           concat(lit("shard_"), col("shard").cast("string")).as("grp"),
           col("bucket"), col("mx"))
@@ -1556,26 +1383,10 @@ object ExtensionQueries {
         // pass), NOT from the shard rollup — the equality with `merged`
         // is then a measured property of register-max associativity,
         // not a tautology of reusing the same rollup
-        val mnz = sm
-          .withColumn("rho", expr("47L - CAST(bit_count(w) AS BIGINT)"))
-          .groupBy("bucket").agg(max("rho").as("mx"))
+        val mnz = sm.groupBy("bucket").agg(max("rho").as("mx"))
           .select(lit("monolithic").as("grp"), col("bucket"), col("mx"))
-        val allz = shz.unionByName(mgz).unionByName(mnz)
-          .groupBy("grp")
-          .agg((lit(128L) - count(lit(1))).as("n_empty"),
-            (sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(47 - mx AS INT))"))
-              + (lit(128L) - count(lit(1))) * 140737488355328L).as("zs"))
-        val lc = (1 to 128).map(v =>
-          (v.toLong, math.round(128.0 * math.log(128.0 / v))))
-        val lcDf = s.createDataFrame(lc).toDF("v", "lc_est")
-        allz
-          .withColumn("raw_est", expr(
-            "CAST(CAST(715271 AS DECIMAL(38,0)) * 16384 * 140737488355328" +
-              " div zs div 1000000 AS BIGINT)"))
-          .join(broadcast(lcDf), col("n_empty") === col("v"), "left")
-          .select(col("grp"), col("n_empty"),
-            expr("CAST(CASE WHEN n_empty > 0 AND raw_est <= 320" +
-              " THEN lc_est ELSE raw_est END AS BIGINT)").as("est_ndv"))
+        PortableHll.estimate(shz.unionByName(mgz).unionByName(mnz), Seq("grp"))
+          .select(col("grp"), col("n_empty"), col("est").as("est_ndv"))
       })
   }
 
@@ -1927,8 +1738,7 @@ object ExtensionQueries {
       s"SELECT '$n' AS c, l_orderkey AS ok, l_linenumber AS ln, $duck AS v FROM lineitem"
     }
     // ceil(log2(nd)) for nd >= 2 via bit-smear of (nd-1); 0 for nd = 1
-    val smearDuck = Seq(1, 2, 4, 8, 16, 32).foldLeft("(n_distinct - 1)")(
-      (acc, k) => s"(($acc) | (($acc) >> $k))")
+    val smearDuck = graft.functions.PortableHll.smearSql("(n_distinct - 1)")
     QueryDef.oracle("q324_encoding_advisor",
       s"""WITH st AS (${duckArms.mkString("\nUNION ALL\n")}),
          |l0 AS (SELECT c, ok, v,
@@ -2020,8 +1830,7 @@ object ExtensionQueries {
         val nd = st.groupBy("c").agg(countDistinct("v").as("n_distinct"))
         // same shift list as smearDuck (incl. the final >>32 stage) so
         // dict_bits cannot diverge once n_distinct-1 >= 2^32 (ADVICE r13)
-        val smear = Seq(1, 2, 4, 8, 16, 32).foldLeft("(n_distinct - 1)")(
-          (acc, k) => s"(($acc) | (shiftright(($acc), $k)))")
+        val smear = graft.functions.PortableHll.smearSparkSql("(n_distinct - 1)")
         g3.join(broadcast(nd), Seq("c"))
           .withColumn("c", expr(cnOf))
           .withColumn("dict_bits", expr(
@@ -2434,10 +2243,8 @@ object ExtensionQueries {
         "CAST(FLOOR(l_quantity) AS BIGINT)"),
       ("l_shipdate", "CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT)",
         "CAST(datediff(CAST(l_shipdate AS DATE), DATE '1970-01-01') AS BIGINT)"))
-    val smearDuck = Seq(1, 2, 4, 8, 16, 32).foldLeft("mag")(
-      (acc, k) => s"(($acc) | (($acc) >> $k))")
-    val smearSpark = Seq(1, 2, 4, 8, 16, 32).foldLeft("mag")(
-      (acc, k) => s"(($acc) | (shiftright(($acc), $k)))")
+    val smearDuck = graft.functions.PortableHll.smearSql("mag")
+    val smearSpark = graft.functions.PortableHll.smearSparkSql("mag")
     QueryDef.oracle("q352_physical_width_advisor",
       s"""WITH st AS (${cols.map { case (n, duck, _) =>
              s"SELECT '$n' AS c, $duck AS v FROM lineitem" }

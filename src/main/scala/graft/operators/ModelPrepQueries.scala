@@ -350,11 +350,14 @@ object ModelPrepQueries {
   /** The CTE chain ending in `l{CanonRounds}(v, lbl)` — the unrolled
     * synchronous min-label rounds over the portable pair graph. Shared by
     * q129 (cluster output) and q150 (leakage-safe split), which must
-    * agree on the clustering by construction. */
+    * agree on the clustering by construction. Every round is
+    * MATERIALIZED: `l<t>` reads `l<t-1>` twice, and an inlined chain
+    * re-expands every earlier round inside each later one (DuckDB ran
+    * out of memory under a 4 GB cap at sf0.001). */
   private[graft] def canonLabelCtes: String = {
     val rounds = (1 to CanonRounds).map { t =>
       val p = s"l${t - 1}"
-      s"""l$t AS (SELECT $p.v, least($p.lbl, coalesce(min(n.lbl), $p.lbl)) AS lbl
+      s"""l$t AS MATERIALIZED (SELECT $p.v, least($p.lbl, coalesce(min(n.lbl), $p.lbl)) AS lbl
          |  FROM $p LEFT JOIN edges e ON e.v = $p.v LEFT JOIN $p n ON n.v = e.u
          |  GROUP BY $p.v, $p.lbl)""".stripMargin
     }.mkString(",\n")

@@ -978,149 +978,71 @@ object TextQueries {
           expr("bits_sum div n_total").as("entropy_micro_bits"))
     })
 
+  /** q224's and q325's per-source sketch input, SHARED: tokens →
+    * distinct (source, tok) (`dt`) → `hll_in` (source, th = the
+    * portable codepoint fold of the token). q325's union merges are
+    * merges of q224's sketches only while both read this verbatim
+    * (drift-spec pinned). */
+  private[graft] val sourceTokenCtes: String =
+    s"""toks AS (SELECT source, unnest(list_filter(
+       |                regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS tok
+       |              FROM documents),
+       |dt AS (SELECT DISTINCT source, tok FROM toks),
+       |hll_in AS (SELECT source,
+       |        list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |          list_transform(string_split(tok, ''),
+       |            c -> CAST(unicode(c) AS BIGINT))),
+       |          (a, b) -> (a * 131 + b) % 1000000007) AS th
+       |      FROM dt)""".stripMargin
+
+  private val hllStreams = graft.functions.PortableHll.Streams(11, 12)
+
+  /** Spark twin of [[sourceTokenCtes]]'s `dt`: distinct (source, tok). */
+  private[graft] def hllDt(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("source"), explode(tokens(col("text"))).as("tok"))
+      .distinct()
+
+  /** (source, bucket, rho) per distinct token of a `dt` frame. */
+  private def hllRegisters(dt: DataFrame): DataFrame =
+    graft.functions.PortableHll.registers(
+      dt.select(col("source"), portableStringHash(col("tok")).as("th")), hllStreams)
+
   /** PORTABLE HyperLogLog — the hash-MATCHED sketch the q25 ledger row
     * says engine-native sketches can't be: per-source distinct-token
-    * cardinality estimated by a 128-bucket HLL built ENTIRELY from the
-    * engine-portable hash family, next to the exact answer and the
-    * error it made. Because every bit of the sketch (bucket index, rank,
-    * harmonic sum, α correction) is exact integer arithmetic over
-    * [[graft.functions.PortableHashKernels]] streams, DuckDB replays the
-    * whole estimator bit-for-bit — the DECLARED result is the estimate
-    * itself, not a rows-only row count. The 30-bit base hash is widened
-    * to ~60 bits via two independent affine streams (h1·P + h2): the
-    * top bits (which set the rank geometry down to ρ ≈ 25, far past the
-    * ρ ≈ log2(n/m)+3 this corpus reaches) come from the uniform h1.
-    * Rank extraction is float-free: bit-smear (w |= w>>1 … w>>32) then
-    * `bit_count` gives the MSB position in pure integer ops — no log2
-    * at a power-of-2 boundary to disagree on. ρ lives in a 53-bit frame
-    * (w < P²/128 < 2⁵³), empty buckets fold in ALGEBRAICALLY
-    * ((m − occupied)·2⁵⁴ added to the harmonic sum — no bucket grid,
-    * no second corpus branch), and the harmonic sum Σ2^(54−ρ) ≤ 128·2⁵⁴ sits in
-    * int64; only the α·m²·2⁵⁴ numerator widens to DECIMAL(38,0)/HUGEINT
-    * (internal — BIGINT on the wire, q149's rule). α₁₂₈ = 0.715271 is a
-    * shared ppm literal. The small-range (linear-counting) correction —
-    * raw ≤ 2.5m with empty buckets ⇒ est = m·ln(m/V) — would reopen
-    * the q205 ln() platform seam, EXCEPT that with m = 128 the
-    * correction has only 128 possible values: they are precomputed once
-    * in Scala and embedded as the SAME 128-entry integer literal table
-    * in both engines (the Benford-constant trick), so the full
-    * Flajolet HLL estimator is replayed with zero float evaluation at
-    * query time. Scale shape: ONE corpus scan in ONE linear chain —
+    * cardinality estimated by a 128-bucket HLL
+    * ([[graft.functions.PortableHll]], streams 11/12, base hash = the
+    * portable codepoint fold of the token), next to the exact answer
+    * and the error it made. Because every bit of the sketch is exact
+    * integer arithmetic, DuckDB replays the whole estimator bit for
+    * bit — the DECLARED result is the estimate itself, not a rows-only
+    * row count. Scale shape: ONE corpus scan in ONE linear chain —
     * distinct (source, token) aggregate (vocab-sized, map-side
     * combined), then a 128-row-per-source (max, count) rollup that
     * carries the exact distinct count alongside the sketch, so the
     * exact/estimate comparison costs no extra pass. `SketchAccuracySpec`
     * gates the estimate against HLL theory (σ = 1.04/√128 ≈ 9.2%).
     * HASH-MATCHED. */
-  /** HLL-128 per-source sketch chain, SHARED: tokens → distinct
-    * (source, tok) (`dt`) → portable widened hash → 128 buckets →
-    * bit-smear rank → per-(source, bucket) max-ρ + count (`r`).
-    * Embedded VERBATIM by q224's estimator and q325's pairwise
-    * set-operation matrix (drift-spec pinned): the two must agree on
-    * the SKETCH by construction, or q325's union merges would stop
-    * being merges of q224's sketches. */
-  private[graft] val hllSourceRhoCtes: String = {
-    import graft.functions.PortableHashKernels.{a, b}
-    val (a1, b1, a2, b2) = (a(11), b(11), a(12), b(12))
-    s"""toks AS (SELECT source, unnest(list_filter(
-       |                regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS tok
-       |              FROM documents),
-       |dt AS (SELECT DISTINCT source, tok FROM toks),
-       |h AS (SELECT source,
-       |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |          list_transform(string_split(tok, ''),
-       |            c -> CAST(unicode(c) AS BIGINT))),
-       |          (a, b) -> (a * 131 + b) % 1000000007) AS th
-       |      FROM dt),
-       |wd AS (SELECT source,
-       |         ((th * $a1 + $b1) % 1000000007) * 1000000007
-       |           + ((th * $a2 + $b2) % 1000000007) AS comb
-       |       FROM h),
-       |bw AS (SELECT source, comb % 128 AS bucket, comb // 128 AS w FROM wd),
-       |m1 AS (SELECT source, bucket, w | (w >> 1) AS w FROM bw),
-       |m2 AS (SELECT source, bucket, w | (w >> 2) AS w FROM m1),
-       |m3 AS (SELECT source, bucket, w | (w >> 4) AS w FROM m2),
-       |m4 AS (SELECT source, bucket, w | (w >> 8) AS w FROM m3),
-       |m5 AS (SELECT source, bucket, w | (w >> 16) AS w FROM m4),
-       |m6 AS (SELECT source, bucket, w | (w >> 32) AS w FROM m5),
-       |r AS (SELECT source, bucket,
-       |        MAX(54 - CAST(bit_count(w) AS BIGINT)) AS mx,
-       |        CAST(count(*) AS BIGINT) AS cnt
-       |      FROM m6 GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** Spark twin of [[hllSourceRhoCtes]]'s `dt`: distinct (source, tok). */
-  private[graft] def hllDt(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("source"), explode(tokens(col("text"))).as("tok"))
-      .distinct()
-
-  /** Spark twin of [[hllSourceRhoCtes]]'s sketch suffix, from a `dt`
-    * frame: (source, bucket, mx, cnt). */
-  private[graft] def hllRho(dt: DataFrame): DataFrame = {
-    import graft.functions.PortableHashKernels.{a, b}
-    val (a1, b1, a2, b2) = (a(11), b(11), a(12), b(12))
-    val bw = dt
-      .withColumn("th", portableStringHash(col("tok")))
-      .withColumn("comb", expr(
-        s"((th * ${a1}L + ${b1}L) % 1000000007L) * 1000000007L" +
-          s" + ((th * ${a2}L + ${b2}L) % 1000000007L)"))
-      .select(col("source"), expr("comb % 128L").as("bucket"),
-        expr("comb div 128L").as("w"))
-    val sm = Seq(1, 2, 4, 8, 16, 32).foldLeft(bw)((df, k) =>
-      df.withColumn("w", expr(s"w | shiftright(w, $k)")))
-    sm.withColumn("rho", expr("54L - CAST(bit_count(w) AS BIGINT)"))
-      .groupBy("source", "bucket")
-      .agg(max("rho").as("mx"), count(lit(1)).as("cnt"))
-  }
-
-  /** The 128-entry linear-counting literal table (the Benford-constant
-    * trick): V empty buckets → round(m·ln(m/V)), computed once HERE so
-    * both engines read identical integers. */
-  private[graft] val hllLcVals: String = (1 to 128).map(v =>
-    s"($v, ${math.round(128.0 * math.log(128.0 / v))})").mkString(", ")
-
   val q224 = {
-    val lcVals = hllLcVals
+    import graft.functions.PortableHll
     QueryDef.oracle("q224_portable_hll",
-      s"""WITH $hllSourceRhoCtes,
-         |z AS (SELECT source,
-         |        CAST(SUM(CAST(1 AS BIGINT) << CAST(54 - mx AS INTEGER))
-         |             + (128 - count(*)) * 18014398509481984 AS BIGINT) AS zs,
-         |        CAST(128 - count(*) AS BIGINT) AS n_empty,
-         |        CAST(SUM(cnt) AS BIGINT) AS n_exact
-         |      FROM r GROUP BY 1),
-         |raw AS (SELECT source, n_exact, n_empty,
-         |          CAST(CAST(715271 AS HUGEINT) * 16384 * 18014398509481984
-         |               // zs // 1000000 AS BIGINT) AS raw_est
-         |        FROM z),
-         |est AS (SELECT r.source, r.n_exact, r.n_empty,
-         |          CAST(CASE WHEN r.n_empty > 0 AND r.raw_est <= 320
-         |               THEN lc.lc_est ELSE r.raw_est END AS BIGINT) AS est_hll
-         |        FROM raw r LEFT JOIN (VALUES $lcVals) AS lc(v, lc_est)
-         |          ON r.n_empty = lc.v)
-         |SELECT source, n_exact, n_empty, est_hll,
-         |       CAST((est_hll - n_exact) * 1000000 // n_exact AS BIGINT) AS err_ppm
+      s"""WITH $sourceTokenCtes,
+         |${PortableHll.registerCtes(hllStreams)},
+         |r AS (SELECT source, bucket, MAX(rho) AS mx,
+         |        CAST(count(*) AS BIGINT) AS cnt
+         |      FROM hll_rank GROUP BY 1, 2),
+         |${PortableHll.estimateCte("est", "r", Seq("source"),
+              "CAST(SUM(cnt) AS BIGINT) AS n_exact")}
+         |SELECT source, n_exact, n_empty, est AS est_hll,
+         |       CAST((est - n_exact) * 1000000 // n_exact AS BIGINT) AS err_ppm
          |FROM est""".stripMargin)(
       (s, d) => {
-        val r = hllRho(hllDt(s, d))
-        val z = r.groupBy("source")
-          .agg((sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(54 - mx AS INT))"))
-            + (lit(128L) - count(lit(1))) * 18014398509481984L).as("zs"),
-            (lit(128L) - count(lit(1))).as("n_empty"),
-            sum("cnt").cast("long").as("n_exact"))
-        val lc = (1 to 128).map(v =>
-          (v.toLong, math.round(128.0 * math.log(128.0 / v))))
-        val lcDf = s.createDataFrame(lc).toDF("v", "lc_est")
-        z.withColumn("raw_est", expr(
-            "CAST(CAST(715271 AS DECIMAL(38,0)) * 16384 * 18014398509481984" +
-              " div zs div 1000000 AS BIGINT)"))
-          .join(broadcast(lcDf), col("n_empty") === col("v"), "left")
-          .withColumn("est_hll", expr(
-            "CAST(CASE WHEN n_empty > 0 AND raw_est <= 320" +
-              " THEN lc_est ELSE raw_est END AS BIGINT)"))
-          .select(col("source"), col("n_exact"), col("n_empty"), col("est_hll"),
-            expr("CAST((est_hll - n_exact) * 1000000 div n_exact AS BIGINT)")
+        val r = hllRegisters(hllDt(s, d))
+          .groupBy("source", "bucket")
+          .agg(max("rho").as("mx"), count(lit(1)).as("cnt"))
+        PortableHll.estimate(r, Seq("source"), sum("cnt").cast("long").as("n_exact"))
+          .select(col("source"), col("n_exact"), col("n_empty"), col("est").as("est_hll"),
+            expr("CAST((est - n_exact) * 1000000 div n_exact AS BIGINT)")
               .as("err_ppm"))
       })
   }
@@ -1161,8 +1083,7 @@ object TextQueries {
       val n = Tables.documents(s, d).select(col("source"),
         least(tokenCount(col("text")).cast("long"), lit(1024L)).as("c"))
       val v0 = n.withColumn("v", greatest(col("c"), lit(16L)) - 1L)
-      val b = Seq(1, 2, 4, 8).foldLeft(v0)((df, k) =>
-        df.withColumn("v", expr(s"v | shiftright(v, $k)")))
+      val b = graft.functions.PortableHll.smear(v0, "v")
         .withColumn("bucket", col("v") + 1L)
       b.groupBy("source", "bucket")
         .agg(count(lit(1)).as("n_docs"), sum("c").as("n_tokens"))
@@ -1923,12 +1844,12 @@ object TextQueries {
     * q159's question: pairwise source vocabulary overlap WITHOUT the
     * token-keyed self-join. Per source pair, |A∩B| is estimated by
     * inclusion–exclusion over the SHARED q224 sketches
-    * ([[hllSourceRhoCtes]], drift-pinned): the union sketch is the
+    * ([[sourceTokenCtes]] into [[graft.functions.PortableHll]],
+    * drift-pinned): the union sketch is the
     * bucket-wise max of the two per-source sketches (the property that
     * makes HLL state mergeable — the same merge a 1000-executor
     * tree-aggregate does), est(A∩B) = est(A) + est(B) − est(A∪B), each
-    * through the full q224 integer estimator including the
-    * linear-counting literal table. Beside it, the EXACT intersection
+    * through the same integer estimator. Beside it, the EXACT intersection
     * (the dt self-join) and the estimator's signed error in ppm OF THE
     * UNION — the denominator inclusion–exclusion error actually scales
     * with (σ ≈ 1.04/√128 on each term). The operational question this
@@ -1940,28 +1861,17 @@ object TextQueries {
     * audit touches anything vocab-sized (tok-keyed equi-join). Output:
     * one row per unordered source pair. HASH-MATCHED. */
   val q325 = {
-    val lcVals = hllLcVals
+    import graft.functions.PortableHll
     QueryDef.oracle("q325_hll_overlap_matrix",
-      s"""WITH $hllSourceRhoCtes,
+      s"""WITH $sourceTokenCtes,
+         |${PortableHll.registerCtes(hllStreams)},
+         |r AS (SELECT source, bucket, MAX(rho) AS mx FROM hll_rank GROUP BY 1, 2),
          |na AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM dt GROUP BY 1),
          |ix AS (SELECT a.source AS src_a, b.source AS src_b,
          |         CAST(count(*) AS BIGINT) AS inter_exact
          |       FROM dt a JOIN dt b ON a.tok = b.tok AND a.source < b.source
          |       GROUP BY 1, 2),
-         |z AS (SELECT source,
-         |        CAST(SUM(CAST(1 AS BIGINT) << CAST(54 - mx AS INTEGER))
-         |             + (128 - count(*)) * 18014398509481984 AS BIGINT) AS zs,
-         |        CAST(128 - count(*) AS BIGINT) AS n_empty
-         |      FROM r GROUP BY 1),
-         |raw AS (SELECT source, n_empty,
-         |          CAST(CAST(715271 AS HUGEINT) * 16384 * 18014398509481984
-         |               // zs // 1000000 AS BIGINT) AS raw_est
-         |        FROM z),
-         |est AS (SELECT r2.source,
-         |          CAST(CASE WHEN r2.n_empty > 0 AND r2.raw_est <= 320
-         |               THEN lc.lc_est ELSE r2.raw_est END AS BIGINT) AS est1
-         |        FROM raw r2 LEFT JOIN (VALUES $lcVals) AS lc(v, lc_est)
-         |          ON r2.n_empty = lc.v),
+         |${PortableHll.estimateCte("est", "r", Seq("source"))},
          |prs AS (SELECT a.source AS src_a, b.source AS src_b
          |        FROM (SELECT DISTINCT source FROM r) a
          |        JOIN (SELECT DISTINCT source FROM r) b ON a.source < b.source),
@@ -1972,24 +1882,11 @@ object TextQueries {
          |             SELECT p.src_a, p.src_b, r.bucket, r.mx
          |             FROM prs p JOIN r ON r.source = p.src_b)
          |       GROUP BY 1, 2, 3),
-         |zu AS (SELECT src_a, src_b,
-         |         CAST(SUM(CAST(1 AS BIGINT) << CAST(54 - mx AS INTEGER))
-         |              + (128 - count(*)) * 18014398509481984 AS BIGINT) AS zs,
-         |         CAST(128 - count(*) AS BIGINT) AS n_empty
-         |       FROM ru GROUP BY 1, 2),
-         |rawu AS (SELECT src_a, src_b, n_empty,
-         |           CAST(CAST(715271 AS HUGEINT) * 16384 * 18014398509481984
-         |                // zs // 1000000 AS BIGINT) AS raw_est
-         |         FROM zu),
-         |estu AS (SELECT r3.src_a, r3.src_b,
-         |           CAST(CASE WHEN r3.n_empty > 0 AND r3.raw_est <= 320
-         |                THEN lc.lc_est ELSE r3.raw_est END AS BIGINT) AS est_u
-         |         FROM rawu r3 LEFT JOIN (VALUES $lcVals) AS lc(v, lc_est)
-         |           ON r3.n_empty = lc.v)
+         |${PortableHll.estimateCte("estu", "ru", Seq("src_a", "src_b"))}
          |SELECT p.src_a, p.src_b, na.n AS n_a, nb.n AS n_b,
          |       COALESCE(ix.inter_exact, CAST(0 AS BIGINT)) AS inter_exact,
-         |       ea.est1 + eb.est1 - eu.est_u AS inter_est,
-         |       CAST((ea.est1 + eb.est1 - eu.est_u
+         |       ea.est + eb.est - eu.est AS inter_est,
+         |       CAST((ea.est + eb.est - eu.est
          |             - COALESCE(ix.inter_exact, CAST(0 AS BIGINT))) * 1000000
          |            // (na.n + nb.n - COALESCE(ix.inter_exact, CAST(0 AS BIGINT)))
          |            AS BIGINT) AS err_vs_union_ppm
@@ -2004,23 +1901,10 @@ object TextQueries {
         // dt feeds BOTH the sketch chain and the exact audit; r feeds
         // the per-source estimator, the pair axis, and the union merge
         val dt = hllDt(s, d).localCheckpoint(false)
-        val r = hllRho(dt).localCheckpoint(false)
-        val lc = (1 to 128).map(v =>
-          (v.toLong, math.round(128.0 * math.log(128.0 / v))))
-        val lcDf = s.createDataFrame(lc).toDF("v", "lc_est")
+        val r = hllRegisters(dt).groupBy("source", "bucket")
+          .agg(max("rho").as("mx")).localCheckpoint(false)
         def estimate(df: DataFrame, keys: Seq[String], out: String): DataFrame =
-          df.groupBy(keys.map(col): _*)
-            .agg((sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(54 - mx AS INT))"))
-              + (lit(128L) - count(lit(1))) * 18014398509481984L).as("zs"),
-              (lit(128L) - count(lit(1))).as("n_empty"))
-            .withColumn("raw_est", expr(
-              "CAST(CAST(715271 AS DECIMAL(38,0)) * 16384 * 18014398509481984" +
-                " div zs div 1000000 AS BIGINT)"))
-            .join(broadcast(lcDf), col("n_empty") === col("v"), "left")
-            .withColumn(out, expr(
-              "CAST(CASE WHEN n_empty > 0 AND raw_est <= 320" +
-                " THEN lc_est ELSE raw_est END AS BIGINT)"))
-            .select((keys.map(col) :+ col(out)): _*)
+          PortableHll.estimate(df, keys).select((keys.map(col) :+ col("est").as(out)): _*)
         val na = dt.groupBy("source").agg(count(lit(1)).as("n"))
         val ix = dt.as("a")
           .join(dt.as("b"), col("a.tok") === col("b.tok") &&

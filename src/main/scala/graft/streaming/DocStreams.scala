@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.functions.HashFunctions._
+import graft.functions.PortableHll
 import graft.operators.DedupQueries
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -753,10 +754,9 @@ object DocStreams {
     * any trigger boundaries, any replay converges to the batch answer.
     * `HllStreamSpec` pins exactly that: the corpus fed in REVERSE
     * doc_id order across two triggers lands on q224's est_hll
-    * bit-for-bit (hash/bucket/rank/harmonic-sum/α/linear-counting are
-    * the same integer math — the Scala fold here, the SQL chain there,
-    * both over [[graft.functions.PortableHashKernels]]'s codepoint
-    * contract, and the q224 oracle replays both).
+    * bit-for-bit (q224's base hash — the portable codepoint fold — and
+    * its streams 11/12 through [[graft.functions.PortableHll]]'s Scala
+    * register fold, which the q224 oracle's SQL twin replays).
     *
     * Scale shape: tokenization + hashing ride the stateful operator's
     * input iterator (per-doc work, no extra shuffle beyond the one
@@ -764,8 +764,8 @@ object DocStreams {
     * per trigger. */
   def hllGate(docs: DataFrame, watermark: String = "1 hour"): Dataset[HllEstimate] = {
     import docs.sparkSession.implicits._
-    import graft.functions.PortableHashKernels.{a, b, P}
-    val (a1, b1, a2, b2) = (a(11), b(11), a(12), b(12))
+    import graft.functions.PortableHashKernels.P
+    val streams = PortableHll.Streams(11, 12)
     val rows = docs
       .withWatermark("ts", watermark)
       .select(col("doc_id"), col("ts"), col("source"), col("text"))
@@ -774,7 +774,7 @@ object DocStreams {
       .flatMapGroupsWithState[HllState, HllEstimate](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (source: String, rs: Iterator[HllDoc], state: GroupState[HllState]) =>
-          val st = state.getOption.getOrElse(HllState(Seq.fill(128)(0L), 0L))
+          val st = state.getOption.getOrElse(HllState(Seq.fill(PortableHll.M)(0L), 0L))
           val regs = st.regs.toArray
           var nDocs = st.n_docs
           var maxTs: Timestamp = null
@@ -783,7 +783,7 @@ object DocStreams {
             if (maxTs == null || doc.ts.after(maxTs)) maxTs = doc.ts
             if (doc.text != null) doc.text.split("\\s+").foreach { tok =>
               if (tok.nonEmpty) {
-                // the portable codepoint fold — q224's hash, verbatim
+                // the portable codepoint fold — q224's base hash, verbatim
                 var th = 0L
                 var ci = 0
                 while (ci < tok.length) {
@@ -791,23 +791,11 @@ object DocStreams {
                   th = (th * 131L + cp) % P
                   ci += Character.charCount(cp)
                 }
-                val comb = ((th * a1 + b1) % P) * P + ((th * a2 + b2) % P)
-                val bucket = (comb % 128L).toInt
-                val w = comb / 128L
-                // rho = 54 - MSB position in the 53-bit frame (0 -> 54)
-                val rho = 54L - (64 - java.lang.Long.numberOfLeadingZeros(w))
-                if (rho > regs(bucket)) regs(bucket) = rho
+                PortableHll.update(regs, th, streams)
               }
             }
           }
-          val nEmpty = regs.count(_ == 0L).toLong
-          val zs = regs.map(mx => 1L << (54 - mx)).sum
-          val raw = (BigInt(715271) * 16384 * 18014398509481984L / zs /
-            1000000).toLong
-          val est =
-            if (nEmpty > 0 && raw <= 320)
-              math.round(128.0 * math.log(128.0 / nEmpty))
-            else raw
+          val (nEmpty, est) = PortableHll.estimate(regs)
           state.update(HllState(regs.toSeq, nDocs))
           Iterator.single(HllEstimate(source, nDocs, nEmpty, est, maxTs))
       }
@@ -830,14 +818,11 @@ object DocStreams {
     * the estimator's ±9.2%σ. Register updates are monotone max — so
     * the FINAL state is feed-order-invariant (any trigger split lands
     * identical registers, spec-pinned) and per-trigger novel_est
-    * telescopes exactly to the final estimate. The estimator is
-    * q244's UNBIASED kernel (quadratic mix + the power-of-two
-    * 2⁴⁶-framed rank), not the q224/hllGate framing whose w =
-    * comb//128 range inflates rank tails by a documented ≈+15% —
-    * q291's exact cum_distinct gates the accuracy directly in
-    * `GramNoveltyStreamSpec`, so the gate ships the estimator that
-    * passes a bias-free 3.8σ bound. Gram fold =
-    * [[graft.functions.PortableHashKernels.gramHashArray]].
+    * telescopes exactly to the final estimate. The sketch is
+    * [[graft.functions.PortableHll]] on streams 11/12 over the gram
+    * hashes of [[graft.functions.PortableHashKernels.gramHashArray]];
+    * q291's exact cum_distinct gates its accuracy in
+    * `GramNoveltyStreamSpec`.
     *
     * Scale shape: gram hashing rides the stateful operator's input
     * iterator; one source-keyed stateful shuffle; one row per source
@@ -845,8 +830,7 @@ object DocStreams {
   def gramNoveltyGate(docs: DataFrame,
       watermark: String = "1 hour"): Dataset[NovEstimate] = {
     import docs.sparkSession.implicits._
-    import graft.functions.PortableHashKernels.{a, b, P}
-    val (a1, b1, a2, b2) = (a(11), b(11), a(12), b(12))
+    val streams = PortableHll.Streams(11, 12)
     val rows = docs
       .withWatermark("ts", watermark)
       .select(col("doc_id"), col("ts"), col("source"), col("text"))
@@ -855,39 +839,17 @@ object DocStreams {
       .flatMapGroupsWithState[NovState, NovEstimate](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (source: String, rs: Iterator[HllDoc], state: GroupState[NovState]) =>
-          val st = state.getOption.getOrElse(NovState(Seq.fill(128)(0L), 0L, 0L))
+          val st = state.getOption.getOrElse(NovState(Seq.fill(PortableHll.M)(0L), 0L, 0L))
           val regs = st.regs.toArray
           var nDocs = st.n_docs
           var maxTs: Timestamp = null
           rs.foreach { doc =>
             nDocs += 1
             if (maxTs == null || doc.ts.after(maxTs)) maxTs = doc.ts
-            if (doc.text != null) {
-              graft.functions.PortableHashKernels
-                .gramHashArray(doc.text, 3).foreach { th =>
-                  // q244's unbiased estimator: quadratic mix, bucket
-                  // from h2's low bits, rank from the 2^46-framed
-                  // w = u1*2^23 + u2 with u_i = (h_i*2^23)//P
-                  val tm = (th * th + 3L * th + 7L) % P
-                  val h1 = (tm * a1 + b1) % P
-                  val h2 = (tm * a2 + b2) % P
-                  val bucket = (h2 % 128L).toInt
-                  val w = (h1 * 8388608L) / P * 8388608L + (h2 * 8388608L) / P
-                  val rho =
-                    if (w == 0L) 47L
-                    else 47L - (64L - java.lang.Long.numberOfLeadingZeros(w))
-                  if (rho > regs(bucket)) regs(bucket) = rho
-                }
-            }
+            if (doc.text != null) graft.functions.PortableHashKernels
+              .gramHashArray(doc.text, 3).foreach(PortableHll.update(regs, _, streams))
           }
-          val nEmpty = regs.count(_ == 0L).toLong
-          val zs = regs.map(mx => 1L << (47 - mx)).sum
-          val raw = (BigInt(715271) * 16384 * 140737488355328L / zs /
-            1000000).toLong
-          val est =
-            if (nEmpty > 0 && raw <= 320)
-              math.round(128.0 * math.log(128.0 / nEmpty))
-            else raw
+          val est = PortableHll.estimate(regs)._2
           val out = NovEstimate(source, nDocs, st.prev_est, est,
             est - st.prev_est, maxTs)
           state.update(NovState(regs.toSeq, nDocs, est))

@@ -251,6 +251,16 @@ class OracleFragmentDriftSpec extends AnyFunSpec with Matchers {
       heads.filter(_._2 != "MATERIALIZED") shouldBe empty
     }
 
+    it("every min-label round of the canonical-label chain is materialized") {
+      // l<t> reads l<t-1> twice: inlined, the six rounds re-expand inside
+      // each other and run DuckDB out of memory (q129, q155, q181)
+      val rounds = """(?m)^(l[1-9]\d*) AS (\w*)""".r
+        .findAllMatchIn(graft.operators.ModelPrepQueries.canonLabelCtes)
+        .map(m => m.group(1) -> m.group(2)).toSeq
+      rounds.map(_._1) shouldBe (1 to graft.operators.ModelPrepQueries.CanonRounds).map(t => s"l$t")
+      rounds.filter(_._2 != "MATERIALIZED") shouldBe empty
+    }
+
     it("every decontamination consumer embeds the canonical eval-gram chain verbatim") {
       val frag = graft.operators.CurationQueries.decontamCtes
       val consumers = sqlByName.filter(_._2.contains("FROM g JOIN ev USING (gram)"))
@@ -373,18 +383,33 @@ class OracleFragmentDriftSpec extends AnyFunSpec with Matchers {
     }
 
     it("every per-source HLL sketch consumer embeds the canonical rho chain verbatim") {
-      // q325's union merges are only merges of q224's sketches if the
-      // two embed the SAME bucket/rank chain — a forked copy would
-      // silently decouple the estimator from the set-operation matrix
-      val frag = graft.operators.TextQueries.hllSourceRhoCtes
-      val consumers = sqlByName.filter(_._2.contains("comb // 128"))
-      consumers.keySet shouldBe Set(
-        "q224_portable_hll", "q325_hll_overlap_matrix")
+      // every HLL oracle, per source or per any other key, embeds
+      // PortableHll's register chain and estimator: a copy forked in one
+      // oracle would decouple its
+      // estimate from the others' (q325's union merges are merges of
+      // q224's sketches, q260's of q244's) and from the streaming gates
+      import graft.functions.PortableHll
+      val streams = Map(
+        "q25_sketch_aggs" -> PortableHll.Streams(17, 18),
+        "q224_portable_hll" -> PortableHll.Streams(11, 12),
+        "q244_table_stats" -> PortableHll.Streams(13, 14),
+        "q260_stats_merge_audit" -> PortableHll.Streams(13, 14),
+        "q325_hll_overlap_matrix" -> PortableHll.Streams(11, 12))
+      val consumers = sqlByName.filter(_._2.contains("hll_rank AS"))
+      consumers.keySet shouldBe streams.keySet
       consumers.foreach { case (name, sql) =>
-        withClue(s"$name forked the HLL rho chain: ") {
-          sql.contains(frag) shouldBe true
+        withClue(s"$name forked the HLL register chain or estimator: ") {
+          sql.contains(PortableHll.registerCtes(streams(name))) shouldBe true
+          sql.contains(PortableHll.foldSql) shouldBe true
+          sql.contains(PortableHll.estimateSql) shouldBe true
         }
       }
+      // q325 reads q224's sketch input verbatim
+      Seq("q224_portable_hll", "q325_hll_overlap_matrix").foreach { name =>
+        sqlByName(name).contains(graft.operators.TextQueries.sourceTokenCtes) shouldBe true
+      }
+      // no oracle keeps a private copy of the estimator's constants
+      sqlByName.filter(_._2.contains("715271")).keySet shouldBe streams.keySet
     }
 
     it("every Gopher-rule consumer embeds the canonical rule battery verbatim") {
